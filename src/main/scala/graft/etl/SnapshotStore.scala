@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, unix_micros}
 
 /** A minimal manifest-pointer table format — the lightweight native
   * answer to the "Delta/Iceberg ACID sink" scope decision (SURVEY
@@ -74,6 +75,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * materialize promptly (the [[graft.streaming.Scd2Stream]] sink
   * collects each dim snapshot before its next promote) or pass a
   * retention bound that covers their read window.
+  *
+  * Pruned reads ([[readKeyRange]], [[readDateRange]],
+  * [[readTimestampRange]], [[readStringRange]], [[readPartitionRanges]],
+  * [[readNullFilter]]) read the head — or, with `version`, that retained
+  * version, so pruning composes with version and timestamp travel —
+  * opening only the files the manifest's skipping index cannot rule out
+  * (per-file stats, partition values, null counts; a file without a
+  * stat line always scans), and apply the EXACT predicate on top: the
+  * index only cuts IO, never correctness. The decision is [[FilePrune]],
+  * the same one the DSv2 source ([[graft.sources.StoreSource]]) makes for
+  * pushed filters. None when nothing was ever committed; an all-pruned
+  * read is an empty frame; lazy, per the contract above.
   *
   * [[graft.streaming.Scd2Stream]] commits its dimension through this
   * store; `etl_snapshot_timetravel` demonstrates the batch-side
@@ -430,20 +443,19 @@ object SnapshotStore {
     * manifest; r16 ADVICE). */
   private[etl] def transformColumn(spec: PartitionSpec,
       df: DataFrame): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, month, year}
-    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.functions.{month, year}
     if (spec.col.exists(_.isWhitespace) || spec.col.contains("`") ||
         spec.transform.exists(_.isWhitespace))
       throw new IllegalArgumentException(
         s"SnapshotStore: partition spec '$spec' carries whitespace or a backtick — " +
           "rejected everywhere a spec is consumed, not only at promote")
-    (spec.transform, df.schema(spec.col).dataType) match {
-      case ("identity", ByteType | ShortType | IntegerType | LongType) =>
-        col(spec.col).cast("long")
-      case ("year", DateType)  => year(col(spec.col)).cast("long")
-      case ("month", DateType) =>
+    val dt = df.schema(spec.col).dataType
+    (spec.transform, FilePrune.kindOf(dt).getOrElse("")) match {
+      case ("identity", "long") => col(spec.col).cast("long")
+      case ("year", "date")     => year(col(spec.col)).cast("long")
+      case ("month", "date")    =>
         (year(col(spec.col)) * 100 + month(col(spec.col))).cast("long")
-      case (t, ByteType | ShortType | IntegerType | LongType) if bucketN(t).isDefined =>
+      case (t, "long") if bucketN(t).isDefined =>
         // Murmur3(seed 42) of the value AS LONG, mod N into [0, N):
         // functions.hash on a long column IS Murmur3_x86_32.hashLong,
         // so [[bucketValue]] reproduces this exactly driver-side. The
@@ -451,7 +463,7 @@ object SnapshotStore {
         org.apache.spark.sql.functions.pmod(
           org.apache.spark.sql.functions.hash(col(spec.col).cast("long")),
           org.apache.spark.sql.functions.lit(bucketN(t).get)).cast("long")
-      case (t, ByteType | ShortType | IntegerType | LongType) if divWidth(t).isDefined =>
+      case (t, "long") if divWidth(t).isDefined =>
         // FLOOR division in EXACT long arithmetic: subtract the
         // non-negative pmod first (the numerator is then exactly
         // divisible, so SQL `div`'s truncation equals floor and matches
@@ -461,7 +473,7 @@ object SnapshotStore {
         org.apache.spark.sql.functions.expr(
           s"CAST((CAST(`${spec.col}` AS BIGINT) - " +
             s"pmod(CAST(`${spec.col}` AS BIGINT), $w)) div $w AS BIGINT)")
-      case (t, dt) => throw new IllegalArgumentException(
+      case (t, _) => throw new IllegalArgumentException(
         s"SnapshotStore: partition transform $t is not applicable to ${spec.col}: $dt — " +
           "identity/div<W>/bucket<N> take an integral column; year/month take a date column")
     }
@@ -480,8 +492,14 @@ object SnapshotStore {
     * SEMANTICS are unchanged: only terminated manifests are memoized
     * (a torn write that completes later must re-read), and the primary
     * dir's `_SUCCESS` liveness check still runs on every call, so a
-    * GC'd version resolves None exactly as before. Bounded: cleared
-    * wholesale past 512 entries (a session touches far fewer). */
+    * GC'd version resolves None exactly as before. A hit that FAILS the
+    * liveness check is dropped and re-read from disk once: a table
+    * dropped and recreated at the same path can write a new manifest
+    * with the old one's key (same length, mtime within the clock's
+    * granularity), and trusting the stale parse would name the old,
+    * deleted snapshot — the table would read as never committed.
+    * Bounded: cleared wholesale past 512 entries (a session touches far
+    * fewer). */
   private val manifestMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), ManifestData]()
   private[etl] def clearManifestMemo(): Unit = manifestMemo.clear()
@@ -491,7 +509,8 @@ object SnapshotStore {
       val st = fs.getFileStatus(manifest)
       (manifest.toString, st.getLen, st.getModificationTime)
     }.toOption
-    val parsed = key.flatMap(k => Option(manifestMemo.get(k))).orElse {
+    def live(m: ManifestData) = fs.exists(new Path(new Path(tgt, m.snap), "_SUCCESS"))
+    def load(): Option[ManifestData] = {
       val p = readContent(fs, manifest)
         .map(parseManifest)
         .filter(m => m.terminated && m.snap.nonEmpty)
@@ -501,7 +520,13 @@ object SnapshotStore {
       }
       p
     }
-    parsed.filter(m => fs.exists(new Path(new Path(tgt, m.snap), "_SUCCESS")))
+    key.flatMap(k => Option(manifestMemo.get(k))) match {
+      case Some(m) if live(m) => Some(m)
+      case Some(_) =>
+        key.foreach(manifestMemo.remove)
+        load().filter(live)
+      case None => load().filter(live)
+    }
   }
 
   /** The data files a committed manifest references, table-root
@@ -592,39 +617,6 @@ object SnapshotStore {
     currentManifest(fs, tgt).flatMap(_._2.asOf)
   }
 
-  /** The current committed version's per-file column stats (empty when
-    * the head commit carries none) — the data-skipping index
-    * [[VersionedLoad.merge]] prunes its touched-file scan with. */
-  def currentFileStats(spark: SparkSession, dir: String): Seq[FileStat] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    currentManifest(fs, tgt).toSeq.flatMap(_._2.stats)
-  }
-
-  /** Version `id`'s per-file column stats (empty when that commit
-    * carries none or the version is not retained). */
-  def filesForVersionStats(spark: SparkSession, dir: String, id: Long): Seq[FileStat] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFiles(fs, tgt).find(_._1 == id)
-      .flatMap { case (_, p) => resolve(fs, tgt, p) }
-      .toSeq.flatMap(_.stats)
-  }
-
-  /** The current committed version's TYPED per-file stats (date /
-    * string columns — empty when the head commit carries none). */
-  def currentTypedFileStats(spark: SparkSession, dir: String): Seq[TypedFileStat] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    currentManifest(fs, tgt).toSeq.flatMap(_._2.typedStats)
-  }
-
-  /** Version `id`'s TYPED per-file stats (empty when that commit
-    * carries none or the version is not retained). */
-  def filesForVersionTypedStats(spark: SparkSession, dir: String, id: Long): Seq[TypedFileStat] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFiles(fs, tgt).find(_._1 == id)
-      .flatMap { case (_, p) => resolve(fs, tgt, p) }
-      .toSeq.flatMap(_.typedStats)
-  }
-
   /** The current committed version's data files, table-root relative —
     * the reuse list an incremental commit passes back to [[promote]].
     * Empty when nothing was ever committed. */
@@ -704,140 +696,44 @@ object SnapshotStore {
       .flatMap { case (_, p) => resolve(fs, tgt, p) }
   }
 
-  /** Read the latest committed state restricted to `column` ∈
-    * [lo, hi] — the data-skipping read: files whose recorded min/max
-    * range cannot intersect [lo, hi] are never opened (listed files
-    * without a stat line always scan), and the EXACT filter is applied
-    * on top of the pruned scan, so correctness never depends on the
-    * stats — they only cut IO. With a key-clustered layout a point or
-    * range lookup touches O(matching files) instead of the table. None
-    * when nothing was ever committed; a table with no stats degrades
-    * to a filtered full scan. Lazy — see the read-laziness contract. */
+  /** The committed state restricted to integral `column` ∈ [lo, hi] —
+    * the grain-key range read (a point lookup when lo == hi, which also
+    * prunes by a bucket spec on the column). A pruned read: see the
+    * object scaladoc. Throws on a non-integral column: a cast to long
+    * would truncate (5.7 passes a [1, 5] filter) and return rows outside
+    * the range. */
   def readKeyRange(spark: SparkSession, dir: String, column: String,
-      lo: Long, hi: Long, version: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).flatMap { m =>
-      val files = manifestDataFiles(fs, tgt, m)
-      val stats = m.stats.filter(st => st.col == column)
-      val statted = stats.map(_.file).toSet
-      val statKeep = (files.filterNot(statted) ++
-        stats.filter(st => st.max >= lo && st.min <= hi).map(_.file)).toSet
-      // dual pruning (r16; per-dimension since r17): an identity/div
-      // partition spec on the SAME column adds its v-line keep set — a
-      // valued file outside the range prunes even when it carries no
-      // stat line (bucket specs never join: a hash is not monotone, so
-      // a key range maps to no bucket range)
-      val keepSet = m.specs.zipWithIndex.collectFirst {
-        case (ps, d) if ps.col == column &&
-            (ps.transform == "identity" || divWidth(ps.transform).isDefined) =>
-          val w = divWidth(ps.transform).getOrElse(1L)
-          statKeep.intersect(partitionKeep(m, files, d,
-            Math.floorDiv(lo, w), Math.floorDiv(hi, w)))
-      }.getOrElse(statKeep)
-      val keep = files.filter(keepSet).sorted
-      // an ALL-PRUNED range is an EMPTY RESULT, not a missing table:
-      // plan over the full list and cut the scan with limit(0)
-      // (PropagateEmptyRelation — no row reads; with a recorded `c`
-      // schema not even footers, closing the r16 every-footer nit)
-      readFilesAs(spark, dir, if (keep.isEmpty) files.sorted else keep, m.schema).map { df =>
-        // the stat writer refuses non-integral columns loudly; the
-        // reader must match — a silent cast("long") on a double column
-        // TRUNCATES (5.7 passes a [1,5] filter) and returns rows
-        // outside the requested range (r14 ADVICE)
-        df.schema(column).dataType match {
-          case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => ()
-          case dt => throw new IllegalArgumentException(
-            s"SnapshotStore.readKeyRange: $column is $dt, not an integral column — " +
-              "use readDateRange/readStringRange for typed keys")
-        }
-        val exact = df.filter(col(column).cast("long").between(lo, hi))
-        if (keep.isEmpty) exact.limit(0) else exact
-      }
+      lo: Long, hi: Long, version: Option[Long] = None): Option[DataFrame] =
+    readPruned(spark, dir, version, "readKeyRange", Some(column -> "long")) { _ =>
+      (Seq(FilePrune.Range(column, "long", FilePrune.Span(lo, hi))),
+        _ => col(column).cast("long").between(lo, hi))
     }
-  }
 
-  /** [[readKeyRange]] for a DATE column: read the latest committed
-    * state restricted to `column` ∈ [loDate, hiDate] (ISO `yyyy-MM-dd`
-    * strings, inclusive), pruning by the manifest's `t date` per-file
-    * stats — files whose recorded epoch-day span cannot intersect the
-    * range are never opened; listed files without a stat line always
-    * scan, and the exact filter runs on top, so the stats only cut IO.
-    * None when nothing was ever committed. Lazy — see the read-laziness
-    * contract. */
+  /** The committed state restricted to date `column` ∈ [loDate, hiDate]
+    * (ISO `yyyy-MM-dd`, inclusive), pruned by the `t date` stats and any
+    * year/month spec on the column. A pruned read: see the object
+    * scaladoc. */
   def readDateRange(spark: SparkSession, dir: String, column: String,
       loDate: String, hiDate: String, version: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val lo = java.time.LocalDate.parse(loDate).toEpochDay
-    val hi = java.time.LocalDate.parse(hiDate).toEpochDay
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).flatMap { m =>
-      val files = manifestDataFiles(fs, tgt, m)
-      val stats = m.typedStats.filter(st => st.col == column && st.kind == "date")
-        .flatMap(st => scala.util.Try((st.file, st.lo.toLong, st.hi.toLong)).toOption)
-      val statted = stats.map(_._1).toSet
-      val statKeep = (files.filterNot(statted) ++
-        stats.filter { case (_, mn, mx) => mx >= lo && mn <= hi }.map(_._1)).toSet
-      // dual pruning (r16; per-dimension since r17): a year/month
-      // partition spec on the SAME column adds its v-line keep set —
-      // the transform is monotone in the date, so the query window
-      // maps to a transform-value range
-      val keepSet = m.specs.zipWithIndex.collectFirst {
-        case (ps, d) if (ps.transform == "year" || ps.transform == "month")
-            && ps.col == column =>
-          def tx(dt: java.time.LocalDate): Long =
-            if (ps.transform == "year") dt.getYear.toLong
-            else dt.getYear.toLong * 100 + dt.getMonthValue
-          statKeep.intersect(partitionKeep(m, files, d,
-            tx(java.time.LocalDate.parse(loDate)), tx(java.time.LocalDate.parse(hiDate))))
-      }.getOrElse(statKeep)
-      val keep = files.filter(keepSet).sorted
-      // all-pruned = empty result, not a missing table (see readKeyRange)
-      readFilesAs(spark, dir, if (keep.isEmpty) files.sorted else keep, m.schema).map { df =>
-        df.schema(column).dataType match {
-          case org.apache.spark.sql.types.DateType => ()
-          case dt => throw new IllegalArgumentException(
-            s"SnapshotStore.readDateRange: $column is $dt, not a date column")
-        }
-        val exact =
-          df.filter(col(column).between(lit(loDate).cast("date"), lit(hiDate).cast("date")))
-        if (keep.isEmpty) exact.limit(0) else exact
-      }
+    val span = FilePrune.Span(java.time.LocalDate.parse(loDate).toEpochDay,
+      java.time.LocalDate.parse(hiDate).toEpochDay)
+    readPruned(spark, dir, version, "readDateRange", Some(column -> "date")) { _ =>
+      (Seq(FilePrune.Range(column, "date", span)),
+        _ => col(column).between(lit(loDate).cast("date"), lit(hiDate).cast("date")))
     }
   }
 
-  /** [[readKeyRange]] for a TIMESTAMP column: `column` ∈ [loMicros,
-    * hiMicros] (epoch micros, inclusive — the engine's asOfDate
-    * determinism discipline: callers pass instants, never wall clock),
-    * pruning by the manifest's `t ts` per-file stats; exact filter on
-    * top via unix_micros, which is session-timezone-independent like
-    * the recorded bounds. All-pruned → empty frame; None only when
-    * never committed. Lazy. */
+  /** The committed state restricted to timestamp `column` ∈ [loMicros,
+    * hiMicros] (epoch micros, inclusive — callers pass instants, never
+    * wall clock), pruned by the `t ts` stats; the exact filter compares
+    * through unix_micros, session-time-zone free like the stats. A
+    * pruned read: see the object scaladoc. */
   def readTimestampRange(spark: SparkSession, dir: String, column: String,
-      loMicros: Long, hiMicros: Long, version: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, unix_micros}
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).flatMap { m =>
-      val files = manifestDataFiles(fs, tgt, m)
-      val stats = m.typedStats.filter(st => st.col == column && st.kind == "ts")
-        .flatMap(st => scala.util.Try((st.file, st.lo.toLong, st.hi.toLong)).toOption)
-      val statted = stats.map(_._1).toSet
-      val keep = (files.filterNot(statted) ++
-        stats.filter { case (_, mn, mx) => mx >= loMicros && mn <= hiMicros }
-          .map(_._1)).sorted
-      // all-pruned = empty result, not a missing table (see readKeyRange)
-      readFilesAs(spark, dir, if (keep.isEmpty) files.sorted else keep, m.schema).map { df =>
-        df.schema(column).dataType match {
-          case org.apache.spark.sql.types.TimestampType => ()
-          case dt => throw new IllegalArgumentException(
-            s"SnapshotStore.readTimestampRange: $column is $dt, not a timestamp column")
-        }
-        val exact = df.filter(unix_micros(col(column)).between(loMicros, hiMicros))
-        if (keep.isEmpty) exact.limit(0) else exact
-      }
+      loMicros: Long, hiMicros: Long, version: Option[Long] = None): Option[DataFrame] =
+    readPruned(spark, dir, version, "readTimestampRange", Some(column -> "ts")) { _ =>
+      (Seq(FilePrune.Range(column, "ts", FilePrune.Span(loMicros, hiMicros))),
+        _ => unix_micros(col(column)).between(loMicros, hiMicros))
     }
-  }
 
   /** The newest committed version id whose pinned as-of instant is ≤
     * `asOfMicros` — [[readAsOf]]'s resolution exposed as an ID, so
@@ -852,120 +748,22 @@ object SnapshotStore {
       .collectFirst { case (id, Some(m)) if m.asOf.exists(_ <= asOfMicros) => id }
   }
 
-  /** [[readKeyRange]] for a STRING column: read the latest committed
-    * state restricted to `column` ∈ [lo, hi] (inclusive, UTF-8 byte
-    * order — Spark's native string comparison), pruning by the
-    * manifest's `t str` per-file prefix stats. Soundness under
-    * truncation: a stored `lo` prefix sorts ≤ the true min (so `hi` <
-    * prefix proves no match), and a TRUNCATED `hi` prefix bounds every
-    * value strictly below the prefix with its last byte incremented —
-    * a file is pruned only when the query range provably clears both.
-    * Unparseable stat lines and unstatted files always scan (absence =
-    * "must scan"). None when nothing was ever committed. Lazy. */
+  /** The committed state restricted to string `column` ∈ [lo, hi]
+    * (inclusive, UTF-8 byte order — Spark's native string comparison),
+    * pruned by the `t str` prefix stats: a file prunes only when the
+    * range provably clears its recorded prefixes, truncated ones
+    * included. A pruned read: see the object scaladoc. */
   def readStringRange(spark: SparkSession, dir: String, column: String,
-      lo: String, hi: String, version: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val loB = lo.getBytes("UTF-8")
-    val hiB = hi.getBytes("UTF-8")
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).flatMap { m =>
-      val files = manifestDataFiles(fs, tgt, m)
-      val stats = m.typedStats.filter(st => st.col == column && st.kind == "str")
-      val statted = stats.map(_.file).toSet
-      val candidates = stats.filter { st =>
-        scala.util.Try {
-          val stLo = decB64(st.lo)
-          if (cmpBytes(hiB, stLo) < 0) false // hi < min's prefix ≤ every value
-          else {
-            val stHi = decB64(st.hi)
-            if (!st.hiTrunc) cmpBytes(loB, stHi) <= 0 // exact max: keep iff lo ≤ max
-            // truncated max: values < incr(prefix); keep iff lo < that
-            // bound (or no finite bound exists — all-0xFF prefix)
-            else incrBytes(stHi).forall(ub => cmpBytes(loB, ub) < 0)
-          }
-        }.getOrElse(true) // undecodable stat → must scan, never prune
-      }.map(_.file)
-      val keep = (files.filterNot(statted) ++ candidates).sorted
-      // all-pruned = empty result, not a missing table (see readKeyRange)
-      readFilesAs(spark, dir, if (keep.isEmpty) files.sorted else keep, m.schema).map { df =>
-        df.schema(column).dataType match {
-          case org.apache.spark.sql.types.StringType => ()
-          case dt => throw new IllegalArgumentException(
-            s"SnapshotStore.readStringRange: $column is $dt, not a string column")
-        }
-        val exact = df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-        if (keep.isEmpty) exact.limit(0) else exact
-      }
+      lo: String, hi: String, version: Option[Long] = None): Option[DataFrame] =
+    readPruned(spark, dir, version, "readStringRange", Some(column -> "str")) { _ =>
+      (Seq(FilePrune.Bytes(column, lo.getBytes("UTF-8"), Some(hi.getBytes("UTF-8")))),
+        _ => col(column) >= lit(lo) && col(column) <= lit(hi))
     }
-  }
-
-  /** Files of `files` a partition-range probe [lo, hi] on dimension
-    * `dim` keeps under manifest `m`'s `v` lines: files with a CONCRETE
-    * dim value inside the range, plus every file without one (no `v`
-    * line at all — pre-evolution — or a `?` on this dimension: a
-    * multi-valued file prunes on its concrete dimensions and
-    * must-scans here). A sound superset of the matching files. */
-  private def partitionKeep(m: ManifestData, files: Seq[String], dim: Int,
-      lo: Long, hi: Long): Set[String] = {
-    val fileSet = files.toSet
-    val vals = m.partVals.filter(pv => fileSet.contains(pv.file))
-    val judged = vals.filter(_.values.lift(dim).exists(_.isDefined))
-    val valued = judged.map(_.file).toSet
-    (files.filterNot(valued) ++
-      judged.filter(_.values(dim).exists(v => v >= lo && v <= hi)).map(_.file)).toSet
-  }
-
-  /** Files a partition-range probe keeps judged by the FILE STATS on
-    * the spec's underlying column instead of the `v` lines — the other
-    * half of dual pruning: every supported transform is MONOTONE in its
-    * column, so a file's recorded column range maps to a transform
-    * range and prunes against [lo, hi] directly. Covers exactly the
-    * files the `v` index cannot: pre-evolution and multi-valued files
-    * that still carry stats. Unstatted files keep (must-scan). */
-  private def specStatsKeep(m: ManifestData, files: Seq[String],
-      spec: PartitionSpec, lo: Long, hi: Long): Set[String] = spec.transform match {
-    case t if t == "identity" || divWidth(t).isDefined =>
-      val tx: Long => Long = divWidth(t).fold(identity[Long] _)(w => Math.floorDiv(_, w))
-      val stats = m.stats.filter(_.col == spec.col)
-      val statted = stats.map(_.file).toSet
-      (files.filterNot(statted) ++
-        stats.filter(st => tx(st.max) >= lo && tx(st.min) <= hi).map(_.file)).toSet
-    case "year" | "month" =>
-      val stats = m.typedStats.filter(st => st.col == spec.col && st.kind == "date")
-        .flatMap(st => scala.util.Try((st.file, st.lo.toLong, st.hi.toLong)).toOption)
-      val statted = stats.map(_._1).toSet
-      def tx(epochDay: Long): Long = {
-        val d = java.time.LocalDate.ofEpochDay(epochDay)
-        if (spec.transform == "year") d.getYear.toLong
-        else d.getYear.toLong * 100 + d.getMonthValue
-      }
-      (files.filterNot(statted) ++
-        stats.filter { case (_, mn, mx) => tx(mx) >= lo && tx(mn) <= hi }
-          .map(_._1)).toSet
-    // bucket<N> (a hash is not monotone — a column range maps to no
-    // bucket range) and unknown transforms: no sound stats mapping —
-    // every file must-scans on this half of the dual prune
-    case _ => files.toSet
-  }
 
   /** Partition-pruned read (r16): the committed state restricted to
-    * partition values ∈ [lo, hi] under the resolved manifest's OWN
-    * [[PartitionSpec]] — files whose recorded `v` value falls outside
-    * the range are NEVER OPENED, before any file stat is consulted;
-    * files without a value line (pre-evolution files, multi-valued
-    * files) are then judged by their FILE STATS on the spec column
-    * (dual pruning — every transform is monotone, so a column range
-    * maps to a transform range), and only files neither index can
-    * clear are scanned; the exact transform filter runs on top, so the
-    * indexes only cut IO, never correctness. With `version` (or a
-    * [[versionAsOf]]-resolved id) the prune applies under THAT
-    * manifest's spec and values — partition pruning composes with time
-    * travel, the year-sliced report read (`BETWEEN &p_year_from AND
-    * &p_year_to`) on yesterday's snapshot. Throws when the resolved
-    * manifest carries no spec (asking for a partition read of an
-    * unpartitioned table is a wiring bug); None when nothing was ever
-    * committed. All-pruned → empty frame. Lazy — see the read-laziness
-    * contract. */
+    * partition values ∈ [lo, hi] under the resolved manifest's leading
+    * [[PartitionSpec]] — the year-sliced report read (`BETWEEN
+    * &p_year_from AND &p_year_to`). See [[readPartitionRanges]]. */
   def readPartitionRange(spark: SparkSession, dir: String, lo: Long, hi: Long,
       version: Option[Long] = None): Option[DataFrame] =
     readPartitionRanges(spark, dir, Seq(Some((lo, hi))), version)
@@ -973,53 +771,34 @@ object SnapshotStore {
   /** Multi-dimension partition-pruned read (r17): `ranges(d)` probes
     * spec dimension `d` with an inclusive transform-value range (None
     * = unconstrained); fewer ranges than dimensions leaves the tail
-    * unconstrained. Pruning INTERSECTS the per-dimension keep sets —
-    * each dimension's `v`-tuple index AND its file-stats mapping (dual
-    * pruning per dimension) — so a file survives only when EVERY
-    * constrained dimension could hold matching rows; the exact
-    * transform filters run on top, so the indexes only cut IO, never
-    * correctness. The reference's Q2/Q3 two-dimension report filters
-    * (year + supplier/state — LQY_query2.txt:79-81, LQY_query3.txt:92)
-    * are exactly this shape over a (year, dim2)-partitioned fact.
-    * Composes with version/timestamp travel like the r16 reader; same
-    * no-spec throw, all-pruned → empty frame, lazy contract. */
+    * unconstrained. A file survives only when EVERY constrained
+    * dimension could hold matching rows — judged by its recorded `v`
+    * value, or, when it has none (pre-evolution and multi-valued files),
+    * by its stats on the spec column through the monotone transform;
+    * the exact transform filters run on top. With `version` the prune
+    * applies under THAT manifest's specs and values, so partition
+    * pruning composes with time travel. The reference's Q2/Q3
+    * two-dimension report filters (year + supplier/state —
+    * LQY_query2.txt:79-81, LQY_query3.txt:92) are exactly this shape
+    * over a (year, dim2)-partitioned fact. Throws when the resolved
+    * manifest carries no spec (a partition read of an unpartitioned
+    * table is a wiring bug) or fewer dimensions than `ranges`; otherwise
+    * a pruned read: see the object scaladoc. */
   def readPartitionRanges(spark: SparkSession, dir: String,
       ranges: Seq[Option[(Long, Long)]],
-      version: Option[Long] = None): Option[DataFrame] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).flatMap { m =>
+      version: Option[Long] = None): Option[DataFrame] =
+    readPruned(spark, dir, version, "readPartitionRanges", None) { m =>
       if (m.specs.isEmpty) throw new IllegalStateException(
         s"SnapshotStore.readPartitionRanges: $dir carries no partition spec" +
           version.fold(" at the committed head")(v => s" at version $v"))
       if (ranges.size > m.specs.size) throw new IllegalArgumentException(
         s"SnapshotStore.readPartitionRanges: ${ranges.size} ranges probe a " +
           s"${m.specs.size}-dimension spec ${m.specs.mkString(", ")}")
-      val files = manifestDataFiles(fs, tgt, m)
       val dims = ranges.zipWithIndex.collect { case (Some((lo, hi)), d) => (d, lo, hi) }
-      val keepSet = dims.foldLeft(files.toSet) { case (acc, (d, lo, hi)) =>
-        acc.intersect(partitionKeep(m, files, d, lo, hi))
-          .intersect(specStatsKeep(m, files, m.specs(d), lo, hi))
-      }
-      val keep = files.filter(keepSet).sorted
-      // all-pruned = empty result, not a missing table (see readKeyRange);
-      // a zero-file version resolves None like every other reader
-      readFilesAs(spark, dir, if (keep.isEmpty) files.sorted else keep, m.schema).map { df =>
-        val exact = dims
-          .map { case (d, lo, hi) => transformColumn(m.specs(d), df).between(lo, hi) }
-          .reduceOption(_ && _)
-          .fold(df)(df.filter)
-        if (keep.isEmpty) exact.limit(0) else exact
-      }
+      (dims.map { case (d, lo, hi) => FilePrune.Dim(d, FilePrune.Span(lo, hi)) },
+        df => dims.map { case (d, lo, hi) => transformColumn(m.specs(d), df).between(lo, hi) }
+          .foldLeft(lit(true))(_ && _))
     }
-  }
-
-  /** The LEADING partition-spec dimension the head (or `version`'s)
-    * manifest was written under, if any — the r16 single-spec view;
-    * multi-dimension tables report their full ordered list through
-    * [[partitionSpecsOf]]. */
-  def partitionSpecOf(spark: SparkSession, dir: String,
-      version: Option[Long] = None): Option[PartitionSpec] =
-    partitionSpecsOf(spark, dir, version).headOption
 
   /** The ORDERED partition-spec list the head (or `version`'s)
     * manifest was written under (empty = unpartitioned) — what a
@@ -1031,37 +810,11 @@ object SnapshotStore {
     manifestFor(fs, tgt, version).toSeq.flatMap(_.specs)
   }
 
-  /** The per-file partition values the head (or `version`'s) manifest
-    * records (empty when unpartitioned) — metadata only, for specs and
-    * operators auditing the layout. */
-  def filePartitionsOf(spark: SparkSession, dir: String,
-      version: Option[Long] = None): Seq[FilePartition] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).toSeq.flatMap(_.partVals)
-  }
-
-  /** The head (or `version`'s) per-file NULL-COUNT stats (empty when
-    * the commit carries none) — metadata only, the IS NULL index. */
-  def fileNullStats(spark: SparkSession, dir: String,
-      version: Option[Long] = None): Seq[FileNullStat] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).toSeq.flatMap(_.nullStats)
-  }
-
-  /** The head (or `version`'s) per-file ROW COUNTS (file → rows; empty
-    * when the commit carries none) — metadata only, what turns a null
-    * count into an IS NOT NULL prune (nulls = rows → no non-null row). */
-  def fileRowCounts(spark: SparkSession, dir: String,
-      version: Option[Long] = None): Map[String, Long] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).map(_.rowCounts).getOrElse(Map.empty)
-  }
-
   /** One resolved version's FULL metadata view, from a SINGLE manifest
-    * resolution (r17 — for the DSv2 planner, whose scan build needs
-    * files + every index at once: seven separate accessor calls would
-    * re-list and re-parse per call, and a commit landing between two
-    * of them could pair one version's file list with another's specs). */
+    * resolution (r17): what every pruning decision ([[FilePrune]]) and
+    * the DSv2 planner read — separate accessor calls would re-list and
+    * re-parse per call, and a commit landing between two of them could
+    * pair one version's file list with another's stats. */
   private[graft] final case class TableMeta(files: Seq[String],
       stats: Seq[FileStat], typedStats: Seq[TypedFileStat],
       specs: Seq[PartitionSpec], partVals: Seq[FilePartition],
@@ -1089,41 +842,45 @@ object SnapshotStore {
       m.partVals, m.rowCounts, m.nullStats, m.schema))
   }
 
-  /** NULL-predicate pruned read (r17 — what min/max stats can never
-    * answer, recorded per file as `n`/`r` lines the way Delta keeps
-    * nullCount): the committed state restricted to `column IS NULL`
-    * (`isNull = true`) or `column IS NOT NULL`, opening only the files
-    * that can hold a matching row — for IS NULL a file with a recorded
-    * null count of 0 prunes; for IS NOT NULL a file whose null count
-    * EQUALS its recorded row count (all-null) prunes. Files without
-    * both lines must-scan (absence is never a prune), and the exact
-    * predicate runs on top, so the index only cuts IO. The reference's
-    * open-loan measures (`returnDate IS NULL`,
-    * 05_InitialLoading.sql:375-390) are the structural consumer.
-    * Composes with version travel; None when never committed;
-    * all-pruned → empty frame; lazy. */
+  /** NULL-predicate pruned read (r17): the committed state restricted to
+    * `column IS NULL` (`isNull = true`) or `column IS NOT NULL`, pruned
+    * by the `n`/`r` lines (the Delta nullCount shape) — for IS NULL a
+    * file with a null count of 0 prunes, for IS NOT NULL a file whose
+    * null count equals its row count. The reference's open-loan
+    * measures (`returnDate IS NULL`, 05_InitialLoading.sql:375-390) are
+    * the structural consumer. A pruned read: see the object scaladoc. */
   def readNullFilter(spark: SparkSession, dir: String, column: String,
-      isNull: Boolean, version: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).flatMap { m =>
-      val files = manifestDataFiles(fs, tgt, m)
-      val nulls = m.nullStats.filter(_.col == column).map(st => st.file -> st.nulls).toMap
-      val keep = files.filter { f =>
-        nulls.get(f) match {
-          case None => true // unstatted → must scan
-          case Some(n) =>
-            if (isNull) n > 0L
-            else m.rowCounts.get(f).forall(_ != n) // no row count → must scan
+      isNull: Boolean, version: Option[Long] = None): Option[DataFrame] =
+    readPruned(spark, dir, version, "readNullFilter", None) { _ =>
+      (Seq(FilePrune.Nulls(column, isNull)),
+        _ => if (isNull) col(column).isNull else col(column).isNotNull)
+    }
+
+  /** The one body of every pruned reader: resolve the head (or
+    * `version`'s) manifest ONCE, let `plan` turn it into bounds and the
+    * exact predicate, keep the files [[FilePrune]] keeps, check
+    * `typed`'s column against its stat kind, and filter exactly on top.
+    * An all-pruned read plans over the full list cut by limit(0)
+    * (PropagateEmptyRelation: no file or, with a recorded schema, footer
+    * is read) — an empty result, not a missing table. */
+  private def readPruned(spark: SparkSession, dir: String, version: Option[Long],
+      op: String, typed: Option[(String, String)])(
+      plan: TableMeta => (Seq[FilePrune.Bound], DataFrame => org.apache.spark.sql.Column))
+      : Option[DataFrame] =
+    tableMeta(spark, dir, version).flatMap { meta =>
+      val (bounds, exact) = plan(meta)
+      val keep = FilePrune.keep(meta, bounds)
+      readFilesAs(spark, dir, if (keep.isEmpty) meta.files.sorted else keep, meta.schema).map { df =>
+        typed.foreach { case (c, kind) =>
+          val dt = df.schema(c).dataType
+          if (!FilePrune.kindOf(dt).contains(kind)) throw new IllegalArgumentException(
+            s"SnapshotStore.$op: $c is $dt, not " + Map("long" -> "an integral",
+              "date" -> "a date", "ts" -> "a timestamp", "str" -> "a string")(kind) + " column")
         }
-      }.sorted
-      // all-pruned = empty result, not a missing table (see readKeyRange)
-      readFilesAs(spark, dir, if (keep.isEmpty) files.sorted else keep, m.schema).map { df =>
-        val exact = df.filter(if (isNull) col(column).isNull else col(column).isNotNull)
-        if (keep.isEmpty) exact.limit(0) else exact
+        val rows = df.filter(exact(df))
+        if (keep.isEmpty) rows.limit(0) else rows
       }
     }
-  }
 
   /** The latest transaction version the table recorded for `appId`
     * (the Delta txn lookup): what an at-least-once driver consults to
@@ -1148,33 +905,6 @@ object SnapshotStore {
     val b = s.getBytes("UTF-8")
     if (b.length <= StatPrefixBytes) (b, false)
     else (java.util.Arrays.copyOf(b, StatPrefixBytes), true)
-  }
-
-  /** Smallest byte string strictly greater than EVERY string carrying
-    * prefix `p`: drop trailing 0xFF bytes, increment the last remaining
-    * byte. None when p is all-0xFF (no finite upper bound exists). */
-  private[etl] def incrBytes(p: Array[Byte]): Option[Array[Byte]] = {
-    var i = p.length - 1
-    while (i >= 0 && p(i) == -1) i -= 1
-    if (i < 0) None
-    else {
-      val r = java.util.Arrays.copyOf(p, i + 1)
-      r(i) = ((r(i) & 0xFF) + 1).toByte
-      Some(r)
-    }
-  }
-
-  /** Unsigned lexicographic byte compare (memcmp order — identical to
-    * Spark UTF8String / parquet binary / DuckDB default collation). */
-  private[etl] def cmpBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xFF) - (b(i) & 0xFF)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
   }
 
   /** Every nested level forced nullable — the shape a mergeSchema read
@@ -1235,9 +965,6 @@ object SnapshotStore {
     val s = java.util.Base64.getEncoder.encodeToString(b)
     if (s.isEmpty) "-" else s
   }
-
-  private[etl] def decB64(s: String): Array[Byte] =
-    if (s == "-") Array.emptyByteArray else java.util.Base64.getDecoder.decode(s)
 
   /** Read the latest committed state. None when nothing was ever
     * committed. Lazy — see the read-laziness contract above. */
@@ -1433,15 +1160,10 @@ object SnapshotStore {
         throw new IllegalArgumentException(
           s"SnapshotStore.promote: statsCol '$c' contains whitespace — " +
             "stat lines are space-delimited and the name would misparse on read")
-      df.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.DateType | org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.StringType => ()
-        case dt => throw new IllegalArgumentException(
+      if (FilePrune.kindOf(df.schema(c).dataType).isEmpty)
+        throw new IllegalArgumentException(
           s"SnapshotStore.promote: statsCol $c must be an integral, date, timestamp, " +
-            s"or string column, got $dt")
-      }
+            s"or string column, got ${df.schema(c).dataType}")
     }
     // the id moves past EVERY listed manifest, not just the committed
     // head: debris squatting at committed-head + 1 would otherwise make
@@ -1569,9 +1291,8 @@ object SnapshotStore {
           .map(pv => s"v ${pv.values.map(_.fold("?")(_.toString)).mkString(" ")} ${pv.file}")
       } else Nil
     val (ownLines, ownPartLines): (Seq[String], Seq[String]) = {
-      import org.apache.spark.sql.functions.{col => fcol, count => fcount, datediff,
-        expr, lit, max => fmax, min => fmin}
-      import org.apache.spark.sql.types.{DateType, StringType}
+      import org.apache.spark.sql.functions.{col => fcol, count => fcount,
+        expr, max => fmax, min => fmin}
       if (ownFiles.isEmpty || (effCols.isEmpty && effSpecs.isEmpty)) (Nil, Nil)
       else {
         val reread = spark.read.parquet(new Path(tgt, snapName).toString)
@@ -1590,16 +1311,9 @@ object SnapshotStore {
         // so the raw column serves every stat kind), and per spec
         // dimension the transform's min/max (a `v` component exactly
         // when single-valued and non-null)
-        val statAggs = effCols.zipWithIndex.flatMap { case (c, i) =>
-          val base = df.schema(c).dataType match {
-            case StringType => fcol(c)
-            // epoch days via datediff, no java.sql.Date round trip
-            case DateType => datediff(fcol(c), lit("1970-01-01").cast("date")).cast("long")
-            // epoch micros — exact, session-TZ-independent
-            case org.apache.spark.sql.types.TimestampType =>
-              org.apache.spark.sql.functions.unix_micros(fcol(c))
-            case _        => fcol(c).cast("long")
-          }
+        val kinds = effCols.map(c => FilePrune.kindOf(df.schema(c).dataType).get)
+        val statAggs = effCols.zip(kinds).zipWithIndex.flatMap { case ((c, kind), i) =>
+          val base = FilePrune.statValue(fcol(c), kind)
           Seq(fmin(base).as(s"__mn$i"), fmax(base).as(s"__mx$i"),
             fcount(fcol(c)).as(s"__nn$i"))
         }
@@ -1623,22 +1337,18 @@ object SnapshotStore {
             val file = r.getString(0)
             val rc   = r.getLong(1)
             Seq(s"r $rc $file") ++
-            effCols.zipWithIndex.flatMap { case (c, i) =>
+            effCols.zip(kinds).zipWithIndex.flatMap { case ((c, kind), i) =>
               val (mnI, mxI, nnI) = (2 + 3 * i, 3 + 3 * i, 4 + 3 * i)
               val nullLine = s"n $c ${rc - r.getLong(nnI)} $file"
               val rangeLine =
                 if (r.isNullAt(mnI) || r.isNullAt(mxI)) None
-                else df.schema(c).dataType match {
-                  case StringType =>
+                else kind match {
+                  case "str" =>
                     val (loP, _)    = truncBytes(r.getString(mnI))
                     val (hiP, hiT)  = truncBytes(r.getString(mxI))
                     Some(s"t str $c ${encB64(loP)} ${encB64(hiP)} ${if (hiT) "T" else "E"} $file")
-                  case DateType =>
-                    Some(s"t date $c ${r.getLong(mnI)} ${r.getLong(mxI)} E $file")
-                  case org.apache.spark.sql.types.TimestampType =>
-                    Some(s"t ts $c ${r.getLong(mnI)} ${r.getLong(mxI)} E $file")
-                  case _ =>
-                    Some(s"s $c ${r.getLong(mnI)} ${r.getLong(mxI)} $file")
+                  case "long" => Some(s"s $c ${r.getLong(mnI)} ${r.getLong(mxI)} $file")
+                  case typed  => Some(s"t $typed $c ${r.getLong(mnI)} ${r.getLong(mxI)} E $file")
                 }
               rangeLine.toSeq :+ nullLine
             }

@@ -35,9 +35,8 @@ object VersionedLoad {
     * `statsCol` (an integral column, normally the grain key) makes
     * this and every downstream commit record per-file min/max stats —
     * the data-skipping index [[merge]] prunes with. `statsCols` adds
-    * further stat columns (integral, date, or string — the typed
-    * multi-column index [[SnapshotStore.readDateRange]] /
-    * [[SnapshotStore.readStringRange]] prune with). */
+    * further stat columns (integral, date, timestamp or string — the
+    * multi-column index every pruned read decides with, [[FilePrune]]). */
   def bootstrap(spark: SparkSession, table: String, initial: DataFrame,
       asOfMicros: Long, keep: Int = 16, statsCol: Option[String] = None,
       statsCols: Seq[String] = Nil,
@@ -117,7 +116,7 @@ object VersionedLoad {
           current.schema(c).dataType match {
             case org.apache.spark.sql.types.DateType =>
               datediff(col(c), lit("1970-01-01").cast("date")).cast("long")
-            case _ if isIntegral(current, c) => col(c).cast("long")
+            case dt if FilePrune.kindOf(dt).contains("long") => col(c).cast("long")
             case dt => throw new IllegalArgumentException(
               s"VersionedLoad.compact: zorderBy column $c must be integral or date, got $dt")
           }
@@ -243,153 +242,33 @@ object VersionedLoad {
       throw new IllegalStateException(
         s"VersionedLoad.$op: version $v of $table is not committed/retained")).toSet
 
-  /** A version's files read with per-file stats pruning against the
-    * key span of `probe` on `statsCol` — integral (long stats), date
-    * (epoch-day typed stats), or string (byte-prefix typed stats,
-    * compared in unsigned UTF-8 byte order like everything else in the
-    * index): files whose recorded range cannot intersect the probe's
-    * [min,max] span are never opened — a row outside every probe key's
-    * range can neither cancel nor match anything. Falls back to the
-    * full list when no statsCol/stats exist or the probe carries null
-    * keys (a null key is described by no stat range — skipping the
-    * prune is the only sound answer). None when `files` is empty. */
+  /** Version `version`'s files that can hold a row whose `statsCol`
+    * lies in `probe`'s span on it — integral, date, timestamp or string,
+    * pruned by [[FilePrune]]: a row outside every probe key's span can
+    * neither cancel nor match anything. The span comes from the
+    * manifest when the caller knows the probe is exactly `probeFiles`
+    * of a committed version (their stat and null-count lines already
+    * record it — no driver-blocking min/max job; r18), else from one
+    * min/max scan of the probe. Every file is read when no statsCol or
+    * stat exists, or the probe carries a null key (no span describes
+    * it). None when nothing is kept. */
   private def prunedRead(spark: SparkSession, table: String, version: Long,
-      files: Set[String], statsCol: Option[String],
-      probe: DataFrame, probeFiles: Option[(Long, Set[String])] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, count, datediff, lit,
-      max => fmax, min => fmin}
-    import org.apache.spark.sql.types.{DateType, StringType}
-    def span(keyExpr: org.apache.spark.sql.Column, c: String): Option[(Any, Any)] = {
-      val r = probe.agg(fmin(keyExpr), fmax(keyExpr),
-        (count(lit(1)) - count(col(c))).as("nulls")).head()
-      if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(2) != 0L) None
-      else Some((r.get(0), r.get(1)))
-    }
-    // Manifest-metadata span of the probe (r18): when the caller knows
-    // the probe is EXACTLY the contents of `probeFiles` of a committed
-    // version, its key span and null count are already recorded in that
-    // version's manifest — reading them replaces the driver-blocking
-    // min/max JOB above (the CDC read path paid one such job per table
-    // per invocation; at 100 TB the probe scan it avoids is O(delta)
-    // bytes). Outer None = the metadata cannot decide (a probe file
-    // without a parsed stat or null-count line) → run the probe job;
-    // inner None = the probe provably carries null keys → no pruning,
-    // the same answer the job path gives. String bounds widen to the
-    // recorded prefixes (lo prefix ≤ true min; truncated hi's byte
-    // successor ≥ true max), so the kept file set is a superset —
-    // pruning stays sound, it only ever keeps extra files.
-    def metaSpanNulls(pv: Long, pfs: Set[String], c: String): Option[Boolean] = {
-      val ns = SnapshotStore.fileNullStats(spark, table, Some(pv))
-        .filter(s => s.col == c && pfs.contains(s.file))
-      if (ns.map(_.file).toSet != pfs) None
-      else Some(ns.exists(_.nulls > 0))
-    }
-    def metaSpanLong(c: String, kind: String): Option[Option[(Long, Long)]] =
-      probeFiles.flatMap { case (pv, pfs) =>
-        if (pfs.isEmpty) None
-        else metaSpanNulls(pv, pfs, c).flatMap { hasNulls =>
-          if (hasNulls) Some(None)
-          else {
-            val st =
-              if (kind == "long")
-                SnapshotStore.filesForVersionStats(spark, table, pv)
-                  .filter(s => s.col == c && pfs.contains(s.file))
-                  .map(s => (s.file, s.min, s.max))
-              else
-                SnapshotStore.filesForVersionTypedStats(spark, table, pv)
-                  .filter(s => s.col == c && s.kind == kind && pfs.contains(s.file))
-                  .flatMap(s => scala.util.Try((s.file, s.lo.toLong, s.hi.toLong)).toOption)
-            if (st.map(_._1).toSet != pfs) None
-            else Some(Some((st.map(_._2).min, st.map(_._3).max)))
-          }
-        }
-      }
-    def metaSpanStr(c: String): Option[Option[(Array[Byte], Array[Byte])]] =
-      probeFiles.flatMap { case (pv, pfs) =>
-        if (pfs.isEmpty) None
-        else metaSpanNulls(pv, pfs, c).flatMap { hasNulls =>
-          if (hasNulls) Some(None)
-          else {
-            val st = SnapshotStore.filesForVersionTypedStats(spark, table, pv)
-              .filter(s => s.col == c && s.kind == "str" && pfs.contains(s.file))
-              .flatMap { s =>
-                scala.util.Try {
-                  val lo = SnapshotStore.decB64(s.lo)
-                  val hi0 = SnapshotStore.decB64(s.hi)
-                  val hi = if (!s.hiTrunc) Some(hi0) else SnapshotStore.incrBytes(hi0)
-                  (s.file, lo, hi)
-                }.toOption
-              }
-            if (st.map(_._1).toSet != pfs || st.exists(_._3.isEmpty)) None
-            else {
-              val lo = st.map(_._2).reduce((a, b) =>
-                if (SnapshotStore.cmpBytes(a, b) <= 0) a else b)
-              val hi = st.map(_._3.get).reduce((a, b) =>
-                if (SnapshotStore.cmpBytes(a, b) >= 0) a else b)
-              Some(Some((lo, hi)))
-            }
-          }
-        }
-      }
-    val pruned: Option[Option[DataFrame]] = statsCol.flatMap { c =>
-      val keepFiles: Option[Seq[String]] = probe.schema(c).dataType match {
-        case _ if isIntegral(probe, c) =>
-          val stats = SnapshotStore.filesForVersionStats(spark, table, version)
-            .filter(st => st.col == c && files.contains(st.file))
-          if (stats.isEmpty) None
-          else metaSpanLong(c, "long")
-            .getOrElse(span(col(c).cast("long"), c).map { case (lo: Long, hi: Long) => (lo, hi) })
-            .map { case (lo, hi) =>
-              val statted = stats.map(_.file).toSet
-              (files.filterNot(statted) ++
-                stats.filter(st => st.max >= lo && st.min <= hi).map(_.file)).toSeq.sorted
-            }
-        case DateType | org.apache.spark.sql.types.TimestampType =>
-          val kind = if (probe.schema(c).dataType == DateType) "date" else "ts"
-          val stats = SnapshotStore.filesForVersionTypedStats(spark, table, version)
-            .filter(st => st.col == c && st.kind == kind && files.contains(st.file))
-            .flatMap(st => scala.util.Try((st.file, st.lo.toLong, st.hi.toLong)).toOption)
-          if (stats.isEmpty) None
-          else metaSpanLong(c, kind)
-            .getOrElse(span(
-              if (kind == "ts") org.apache.spark.sql.functions.unix_micros(col(c))
-              else datediff(col(c), lit("1970-01-01").cast("date")).cast("long"), c)
-              .map { case (lo: Long, hi: Long) => (lo, hi) })
-            .map { case (lo, hi) =>
-              val statted = stats.map(_._1).toSet
-              (files.filterNot(statted) ++
-                stats.filter { case (_, mn, mx) => mx >= lo && mn <= hi }
-                  .map(_._1)).toSeq.sorted
-            }
-        case StringType =>
-          val stats = SnapshotStore.filesForVersionTypedStats(spark, table, version)
-            .filter(st => st.col == c && st.kind == "str" && files.contains(st.file))
-          if (stats.isEmpty) None
-          else metaSpanStr(c)
-            .getOrElse(span(col(c), c).map { case (loS: String, hiS: String) =>
-              (loS.getBytes("UTF-8"), hiS.getBytes("UTF-8")) })
-            .map { case (loB, hiB) =>
-            val (parsedKeep, parsedAll) = stats.foldLeft(
-              (List.empty[String], List.empty[String])) { case ((keep, all), st) =>
-              scala.util.Try {
-                val stLo = SnapshotStore.decB64(st.lo)
-                val stHi = SnapshotStore.decB64(st.hi)
-                val intersects =
-                  SnapshotStore.cmpBytes(hiB, stLo) >= 0 && (
-                    if (!st.hiTrunc) SnapshotStore.cmpBytes(loB, stHi) <= 0
-                    else SnapshotStore.incrBytes(stHi)
-                      .forall(ub => SnapshotStore.cmpBytes(loB, ub) < 0))
-                (if (intersects) st.file :: keep else keep, st.file :: all)
-              }.getOrElse((keep, all)) // unparseable → unstatted → must scan
-            }
-            (files.filterNot(parsedAll.toSet) ++ parsedKeep).toSeq.sorted
-          }
-        case _ => None
-      }
-      keepFiles.map(keep => SnapshotStore.readFilesForVersion(spark, table, Some(version), keep))
-    }
-    pruned.getOrElse(
-      SnapshotStore.readFilesForVersion(spark, table, Some(version), files.toSeq.sorted))
+      statsCol: Option[String], probe: DataFrame,
+      probeFiles: Option[(Long, Set[String])] = None): Option[DataFrame] = {
+    val meta = SnapshotStore.tableMeta(spark, table, Some(version)).getOrElse(
+      throw new IllegalStateException(
+        s"VersionedLoad: version $version of $table is not committed/retained"))
+    val kept = for {
+      c <- statsCol
+      kind <- FilePrune.kindOf(probe.schema(c).dataType)
+      if FilePrune.hasStats(meta, c, kind)
+      bound <- probeFiles
+        .flatMap { case (pv, pfs) => SnapshotStore.tableMeta(spark, table, Some(pv))
+          .flatMap(FilePrune.spanOf(_, c, kind, pfs)) }
+        .getOrElse(FilePrune.scanSpan(probe, c, kind))
+    } yield FilePrune.keep(meta, Seq(bound))
+    SnapshotStore.readFilesForVersion(spark, table, Some(version),
+      kept.getOrElse(meta.files.sorted))
   }
 
   /** Value-exact CDC between two committed versions: every row of
@@ -424,7 +303,7 @@ object VersionedLoad {
     val newFiles  = (toFiles -- fromFiles).toSeq.sorted
     SnapshotStore.readFilesForVersion(spark, table, Some(toVersion), newFiles).flatMap { newRows =>
       val fromSide: Option[DataFrame] =
-        prunedRead(spark, table, fromVersion, fromFiles, statsCol, newRows,
+        prunedRead(spark, table, fromVersion, statsCol, newRows,
           // the probe is exactly the new files' contents — the manifest
           // span fast path applies (no driver min/max job)
           probeFiles = Some((toVersion, newFiles.toSet)))
@@ -512,7 +391,7 @@ object VersionedLoad {
     val probeCol = statsCol.filter(keys.contains)
     val dels = SnapshotStore.readFilesForVersion(spark, table, Some(fromVersion),
       removed.toSeq.sorted).map { cand =>
-      val toKeys = prunedRead(spark, table, toVersion, toFiles, probeCol, cand,
+      val toKeys = prunedRead(spark, table, toVersion, probeCol, cand,
         // the candidates are exactly the removed files' contents — the
         // manifest span fast path applies (no driver min/max job)
         probeFiles = Some((fromVersion, removed)))
@@ -795,160 +674,49 @@ object VersionedLoad {
     * `batchKeys` — the copy-on-write rewrite set shared by [[merge]],
     * [[delete]], and [[applyCdc]].
     *
-    * DATA SKIPPING: when the head manifest carries per-file min/max
-    * stats on ANY component of the grain — integral (`s` lines), date,
-    * or string (`t` lines) — EVERY statted component prunes and the
-    * candidate sets INTERSECT (r16): a file whose recorded range on
-    * some component cannot contain any batch key's component needs no
-    * scan at all — sound for composite keys because a file can only
-    * hold a matching TUPLE if it holds each component inside its
-    * recorded range, so each component's keep set is a superset of the
-    * touched set and the intersection still is — strictly tighter for
-    * composite grains statted on several components. A partition spec
-    * on a grain key component joins the same intersection through the
-    * batch keys' transform span (dual pruning — see the partKeep note
-    * below). String probes compare in unsigned
-    * BYTE order via cast-to-binary (Spark's binary ordering IS
-    * memcmp), matching the prefix bounds' encoding, so a truncated
-    * bound can widen but never wrongly prune; a truncated max with no
-    * finite successor (all-0xFF prefix) keeps the file. The
+    * DATA SKIPPING ([[FilePrune]]): every grain component the head
+    * manifest stats — integral, date, timestamp or string — probes the
+    * batch keys one by one against the per-file bounds (one broadcast
+    * range join; file count is metadata-scale), and every partition
+    * dimension over a grain component probes the keys' transform span
+    * (monotone transforms) or distinct value set (bucket<N> — a span
+    * would smear over every unrelated bucket between). The keep sets
+    * INTERSECT: a file can hold a matching TUPLE only if it holds each
+    * component inside its recorded bounds, so each set is a superset of
+    * the touched files and so is their intersection — strictly tighter
+    * for composite grains statted on several components. Files without
+    * a parseable stat or value line always scan; null key components
+    * never match under the store's null-unsafe key equality. The
     * touched-file location drops from one full-table read to a read of
-    * the range-candidate files (with a key-clustered layout:
-    * O(touched)). Files without a parseable stat line always scan —
-    * absence means "must scan", never "prunable". The candidate check
-    * is one broadcast range probe of the batch keys against the file
-    * ranges (file count is metadata-scale, like the manifest itself). */
+    * the candidate files (with a key-clustered layout: O(touched)). */
   private def locateTouched(spark: SparkSession, table: String,
       files: Seq[String], batchKeys: DataFrame, keys: Seq[String]): Set[String] = {
-    import org.apache.spark.sql.functions.{broadcast, col, datediff, expr, lit, when}
-    import org.apache.spark.sql.types.{DateType, StringType}
-    val fileSet = files.toSet
-    val longStats = SnapshotStore.currentFileStats(spark, table)
-      .filter(st => fileSet.contains(st.file))
-    val typedStats = SnapshotStore.currentTypedFileStats(spark, table)
-      .filter(st => fileSet.contains(st.file))
-    def kindOf(k: String): Option[String] = batchKeys.schema(k).dataType match {
-      case _ if isIntegral(batchKeys, k)            => Some("long")
-      case DateType                                 => Some("date")
-      case org.apache.spark.sql.types.TimestampType => Some("ts")
-      case StringType                               => Some("str")
-      case _                                        => None
-    }
-    val statKeys: Seq[(String, String)] =
-      keys.flatMap(k => kindOf(k).map(k -> _)).filter {
-        case (k, "long") => longStats.exists(_.col == k)
-        case (k, kind)   => typedStats.exists(st => st.col == k && st.kind == kind)
-      }
-    def keepSetFor(keyCol: String, kind: String): Set[String] = {
-      import spark.implicits._
-      // (candidate files via the broadcast range probe, files whose
-      // stat line exists AND parsed — unparseable lines must scan)
-      val (candidates, statted): (Set[String], Set[String]) = kind match {
-        case "long" =>
-          val stats = longStats.filter(_.col == keyCol)
-          val ranges = stats.map(st => (st.file, st.min, st.max))
-            .toDF("__file", "__mn", "__mx")
-          val c = batchKeys
-            .join(broadcast(ranges),
-              col(keyCol).cast("long") >= col("__mn") &&
-                col(keyCol).cast("long") <= col("__mx"))
-            .select("__file").distinct()
-            .collect().map(_.getString(0)).toSet
-          (c, stats.map(_.file).toSet)
-        case "date" | "ts" =>
-          val stats = typedStats.filter(st => st.col == keyCol && st.kind == kind)
-            .flatMap(st => scala.util.Try((st.file, st.lo.toLong, st.hi.toLong)).toOption)
-          val ranges = stats.toDF("__file", "__mn", "__mx")
-          val keyNum =
-            if (kind == "ts") org.apache.spark.sql.functions.unix_micros(col(keyCol))
-            else datediff(col(keyCol), lit("1970-01-01").cast("date")).cast("long")
-          val c = batchKeys
-            .join(broadcast(ranges), keyNum >= col("__mn") && keyNum <= col("__mx"))
-            .select("__file").distinct()
-            .collect().map(_.getString(0)).toSet
-          (c, stats.map(_._1).toSet)
-        case _ =>
-          // string bounds: lo prefix (≤ true min in byte order) and an
-          // upper bound — the exact max (inclusive) or the truncated
-          // prefix's byte successor (exclusive); None = unbounded above
-          val stats = typedStats.filter(st => st.col == keyCol && st.kind == "str")
-            .flatMap { st =>
-              scala.util.Try {
-                val lo = SnapshotStore.decB64(st.lo)
-                val hi = SnapshotStore.decB64(st.hi)
-                val ub = if (!st.hiTrunc) Some(hi) else SnapshotStore.incrBytes(hi)
-                (st.file, lo, ub, !st.hiTrunc)
-              }.toOption
-            }
-          val ranges = stats.toDF("__file", "__lo", "__ub", "__inc")
-          val keyBin = col(keyCol).cast("binary")
-          val c = batchKeys
-            .join(broadcast(ranges),
-              keyBin >= col("__lo") &&
-                (col("__ub").isNull ||
-                  when(col("__inc"), keyBin <= col("__ub"))
-                    .otherwise(keyBin < col("__ub"))))
-            .select("__file").distinct()
-            .collect().map(_.getString(0)).toSet
-          (c, stats.map(_._1).toSet)
-      }
-      (files.filterNot(statted) ++ files.filter(candidates)).toSet
-    }
-    // partition-value keep sets (r16; per-dimension since r17 — dual
-    // pruning on the WRITE path): EVERY spec dimension transforming a
-    // grain key component contributes a keep set. For the monotone
-    // transforms the batch keys' transform SPAN prunes valued files
-    // like the stats do — a valued file outside the span cannot hold
-    // any batch key's row; for bucket<N> (not monotone) the batch
-    // keys' DISTINCT bucket SET probes instead (bounded by N values —
-    // a span would smear [min,max] over every unrelated bucket
-    // between). A `?` (multi-valued) dimension component and unvalued
-    // files keep (must-scan); null key components never match under
-    // the store's null-unsafe key equality so ignoring them is sound.
-    val partKeeps: Seq[Set[String]] = {
-      import org.apache.spark.sql.functions.{min => fmin, max => fmax}
-      val specs = SnapshotStore.partitionSpecsOf(spark, table)
-      lazy val partVals = SnapshotStore.filePartitionsOf(spark, table)
-        .filter(pv => fileSet.contains(pv.file))
-      specs.zipWithIndex.filter { case (ps, _) => keys.contains(ps.col) }
-        .flatMap { case (ps, d) =>
-          // the ONE transform definition (SnapshotStore.transformColumn)
-          // also builds the batch-side probe, so write-path pruning can
-          // never drift from the recorded values; a transform the batch
-          // key's type cannot take reads as None → skip this dimension
-          scala.util.Try(SnapshotStore.transformColumn(ps, batchKeys)).toOption
-            .flatMap { tx =>
-              def keepFrom(pred: Long => Boolean): Set[String] = {
-                val judged = partVals.filter(_.values.lift(d).exists(_.isDefined))
-                val valued = judged.map(_.file).toSet
-                (files.filterNot(valued) ++
-                  judged.filter(_.values(d).exists(pred)).map(_.file)).toSet
-              }
+    import org.apache.spark.sql.functions.{col, expr, max => fmax, min => fmin}
+    val keep: String => Boolean = SnapshotStore.tableMeta(spark, table, None)
+      .fold((_: String) => true) { meta =>
+        val probes = keys.flatMap(k => FilePrune.probeKeep(meta, batchKeys, k))
+        // the ONE transform definition (SnapshotStore.transformColumn)
+        // also builds the batch-side probe, so write-path pruning can
+        // never drift from the recorded values; a transform the batch
+        // key's type cannot take skips its dimension
+        val dims = meta.specs.zipWithIndex.filter { case (ps, _) => keys.contains(ps.col) }
+          .flatMap { case (ps, d) =>
+            scala.util.Try(SnapshotStore.transformColumn(ps, batchKeys)).toOption.flatMap { tx =>
               if (SnapshotStore.bucketN(ps.transform).isDefined) {
-                val bs = batchKeys.select(tx.as("__b"))
-                  .filter(col("__b").isNotNull).distinct()
-                  .collect().map(_.getLong(0)).toSet
-                if (bs.isEmpty) None else Some(keepFrom(bs.contains))
+                val bs = batchKeys.select(tx.as("__b")).filter(col("__b").isNotNull).distinct()
+                  .collect().map(_.getLong(0)).toSeq
+                if (bs.isEmpty) None else Some(FilePrune.Dim(d, FilePrune.Span.of(bs)))
               } else {
                 val r = batchKeys.agg(fmin(tx), fmax(tx)).head()
                 if (r.isNullAt(0) || r.isNullAt(1)) None
-                else {
-                  val (lo, hi) = (r.getLong(0), r.getLong(1))
-                  Some(keepFrom(v => v >= lo && v <= hi))
-                }
+                else Some(FilePrune.Dim(d, FilePrune.Span(r.getLong(0), r.getLong(1))))
               }
             }
-        }
-    }
-    // intersect every statted component's keep set plus the partition
-    // keep sets (see scaladoc): each is a sound superset of the touched
-    // files, so the intersection is too — and strictly tighter when the
-    // grain carries several statted components (a file in-range on
-    // date_key but out-of-range on member_key is never opened)
-    val keepSets = statKeys.map { case (k, kind) => keepSetFor(k, kind) } ++ partKeeps
-    val scanFiles: Seq[String] =
-      if (keepSets.isEmpty) files
-      else files.filter(f => keepSets.forall(_.contains(f))).sorted
+          }
+        val byDims = FilePrune.keeps(meta, dims)
+        f => probes.forall(_(f)) && byDims(f)
+      }
+    val scanFiles = files.filter(keep).sorted
     // root-relative id of each scanned row's file: snapshot dirs are
     // direct children of the table root, so the trailing two path
     // segments of input_file_name() are exactly the manifest's
@@ -967,14 +735,4 @@ object VersionedLoad {
         .collect().map(_.getString(0)).toSet
     }
   }
-
-  /** Stats-based pruning is only sound for integral keys: the stat
-    * writer casts to long, and a lossy cast (double, string) would
-    * record bounds the true values can escape. */
-  private def isIntegral(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
 }

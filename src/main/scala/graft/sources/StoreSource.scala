@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import graft.etl.SnapshotStore
+import graft.etl.{FilePrune, SnapshotStore}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -28,11 +28,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * shuffle Exchange (`spark.sql.sources.v2.bucketing.enabled=true`;
   * StoreSourceSpec asserts the Exchange-free plan).
   *
-  * This is the preference-order answer the hand-called readers
-  * ([[SnapshotStore.readKeyRange]] ff.) cannot give: inside the
-  * planner, the pruning composes with everything Catalyst does —
-  * `df.filter(...)` reaches the source as pushed filters, EXPLAIN
-  * shows the decision, and joins see the layout.
+  * The file pruning is [[FilePrune]], the decision the hand-called
+  * readers ([[SnapshotStore.readKeyRange]] and its siblings) make: a
+  * pushed filter keeps exactly the files the matching reader opens.
+  * What the source adds is the planner: `df.filter(...)` reaches it as
+  * pushed filters and composes with everything else Catalyst does,
+  * EXPLAIN shows the decision, and joins see the layout.
   *
   * Options: `path` (table root), `version` (pin a committed version),
   * `partitionGrouped` (= "true": one task per partition-value tuple,
@@ -233,12 +234,12 @@ private[sources] object StoreWrites {
   }
 }
 
-/** Driver-side planning: collects pushed filters, prunes the manifest's
-  * file list by every index it carries (per-column long stats,
-  * partition-value tuples through the monotone/bucket transforms, null
-  * counts), and prunes columns. All filters stay RESIDUAL (Spark
-  * re-applies them on the scan output) — the indexes only cut IO,
-  * never correctness, the store's standing contract. */
+/** Driver-side planning: collects pushed filters as [[FilePrune]]
+  * bounds (comparisons and IN on integral, date, timestamp and string
+  * columns; IS [NOT] NULL on any), prunes the manifest's file list by
+  * them, and prunes columns. All filters stay RESIDUAL (Spark re-applies
+  * them on the scan output) — the indexes only cut IO, never
+  * correctness, the store's standing contract. */
 private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
     grouped: Boolean, tableSchema: StructType)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -284,50 +285,30 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
       else StructType(tableSchema.fields.sortBy(_.dataType.defaultSize).take(1))
     }
 
-  private def integral(c: String): Boolean =
-    tableSchema.fields.find(_.name == c).map(_.dataType).exists {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
+  /** The bound a pushed filter puts on the manifest, if any index can
+    * act on it. */
+  private def boundOf(f: sources.Filter): Option[FilePrune.Bound] = {
+    def cmp(c: String, op: String, vs: Any*) =
+      tableSchema.fields.find(_.name == c).flatMap(fd => FilePrune.kindOf(fd.dataType))
+        .flatMap(FilePrune.compare(c, _, op, vs))
+    f match {
+      case sources.EqualTo(c, v)            => cmp(c, "=", v)
+      case sources.In(c, vs) if vs.nonEmpty => cmp(c, "=", vs.toIndexedSeq: _*)
+      case sources.GreaterThan(c, v)        => cmp(c, ">", v)
+      case sources.GreaterThanOrEqual(c, v) => cmp(c, ">=", v)
+      case sources.LessThan(c, v)           => cmp(c, "<", v)
+      case sources.LessThanOrEqual(c, v)    => cmp(c, "<=", v)
+      case sources.IsNull(c)                => Some(FilePrune.Nulls(c, isNull = true))
+      case sources.IsNotNull(c)             => Some(FilePrune.Nulls(c, isNull = false))
+      case _ => None
     }
-
-  private def dateCol(c: String): Boolean =
-    tableSchema.fields.find(_.name == c)
-      .exists(_.dataType == org.apache.spark.sql.types.DateType)
-
-  /** A comparison value as epoch days, for DATE-column pushdown (v1
-    * filters carry java.sql.Date, or java.time.LocalDate under the
-    * java8 datetime API). */
-  private def epochDay(v: Any): Option[Long] = v match {
-    case d: java.sql.Date        => Some(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate  => Some(d.toEpochDay)
-    case _                       => None
   }
 
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
     // a filter is "pushed" when some manifest index can act on it; it
     // is ALWAYS also returned as residual (the parquet-source pattern:
     // best-effort pushdown, exact re-application on top)
-    // integral columns admit only WHOLE-number literals: a fractional
-    // bound truncated via longValue would shift GreaterThan/LessThan's
-    // ±1 adjustment across a real value and prune files holding
-    // matching rows (review r17) — rejecting it keeps the filter
-    // residual-only, which is always sound
-    def cmpValue(c: String, v: Any): Boolean = v match {
-      case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
-           _: java.lang.Long => integral(c)
-      case other => dateCol(c) && epochDay(other).isDefined
-    }
-    pushed = filters.filter {
-      case sources.EqualTo(c, v) => cmpValue(c, v)
-      case sources.GreaterThan(c, v) => cmpValue(c, v)
-      case sources.GreaterThanOrEqual(c, v) => cmpValue(c, v)
-      case sources.LessThan(c, v) => cmpValue(c, v)
-      case sources.LessThanOrEqual(c, v) => cmpValue(c, v)
-      case sources.In(c, vs) => vs.nonEmpty && vs.forall(cmpValue(c, _))
-      case sources.IsNull(_) | sources.IsNotNull(_) => true
-      case _ => false
-    }
+    pushed = filters.filter(boundOf(_).isDefined)
     filters
   }
 
@@ -412,7 +393,7 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
     val groupDims: Seq[Int] = groupCols.map { c =>
       if (!fieldOf(c).exists(_.dataType == LongType)) return None
       val d = specIdx.getOrElse(c, return None)
-      val nulls = meta.nullStats.filter(_.col == c).map(st => st.file -> st.nulls).toMap
+      val nulls = FilePrune.nullCounts(meta, c)
       val ok = live.forall(f =>
         byFile.get(f).exists(_.lift(d).exists(_.isDefined)) && nulls.get(f).contains(0L))
       if (!ok) return None
@@ -427,32 +408,23 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
     def minMax(colRef: org.apache.spark.sql.connector.expressions.Expression,
         wantMin: Boolean): Option[(StructField, Eval)] =
       nameOf(colRef).flatMap(c => fieldOf(c)).flatMap { f =>
-        def pick(vals: Seq[Long]): Long = if (wantMin) vals.min else vals.max
-        f.dataType match {
-          case ByteType | ShortType | IntegerType | LongType =>
-            val st = meta.stats.filter(_.col == f.name)
-              .map(s => s.file -> (if (wantMin) s.min else s.max)).toMap
-            Some((StructField(s"${if (wantMin) "min" else "max"}(${f.name})", f.dataType),
-              (fs: Seq[String]) =>
-                if (!fs.forall(st.contains)) None
-                else Some(if (fs.isEmpty) null else {
-                  val v = pick(fs.map(st))
-                  f.dataType match {
-                    case ByteType    => Byte.box(v.toByte)
-                    case ShortType   => Short.box(v.toShort)
-                    case IntegerType => Int.box(v.toInt)
-                    case _           => Long.box(v)
-                  }
-                })))
-          case DateType =>
-            val st = meta.typedStats.filter(s => s.col == f.name && s.kind == "date")
-              .flatMap(s => scala.util.Try(
-                s.file -> (if (wantMin) s.lo.toLong else s.hi.toLong)).toOption).toMap
-            Some((StructField(s"${if (wantMin) "min" else "max"}(${f.name})", DateType),
-              (fs: Seq[String]) =>
-                if (!fs.forall(st.contains)) None
-                else Some(if (fs.isEmpty) null else Int.box(pick(fs.map(st)).toInt))))
-          case _ => None // doubles unstatted; string stats are truncated prefixes
+        // integral and date stats are exact values; timestamps are left
+        // to the scan, string stats are truncated prefixes
+        FilePrune.kindOf(f.dataType).filter(k => k == "long" || k == "date").map { kind =>
+          val st = FilePrune.longRanges(meta, f.name, kind)
+            .map { case (file, (mn, mx)) => file -> (if (wantMin) mn else mx) }
+          (StructField(s"${if (wantMin) "min" else "max"}(${f.name})", f.dataType),
+            (fs: Seq[String]) =>
+              if (!fs.forall(st.contains)) None
+              else Some(if (fs.isEmpty) null else {
+                val v = if (wantMin) fs.map(st).min else fs.map(st).max
+                f.dataType match {
+                  case ByteType             => Byte.box(v.toByte)
+                  case ShortType            => Short.box(v.toShort)
+                  case IntegerType | DateType => Int.box(v.toInt)
+                  case _                    => Long.box(v)
+                }
+              }))
         }
       }
     val evals: Seq[(StructField, Eval)] = agg.aggregateExpressions.toSeq.map {
@@ -466,8 +438,7 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
             (fs: Seq[String]) => Some(Long.box(fs.map(rowsOf).sum)): Option[Any])
         case ref =>
           val name = nameOf(ref).getOrElse(return None)
-          val nulls = meta.nullStats.filter(_.col == name)
-            .map(st => st.file -> st.nulls).toMap
+          val nulls = FilePrune.nullCounts(meta, name)
           (StructField(s"count($name)", LongType, nullable = false),
             (fs: Seq[String]) =>
               if (!fs.forall(nulls.contains)) None
@@ -497,120 +468,7 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
     aggAnswer.foreach { case (schema, rows) =>
       return new StoreAggScan(dir, schema, rows)
     }
-    val files = meta.files
-    // per-column conjunctive ranges from the pushed comparisons — one
-    // numeric domain per column: raw longs for integral columns, EPOCH
-    // DAYS for date columns (matching the `t date` stat encoding)
-    val ranges = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    def tighten(c: String, lo: Long, hi: Long): Unit = {
-      val (l0, h0) = ranges.getOrElse(c, (Long.MinValue, Long.MaxValue))
-      ranges(c) = (math.max(l0, lo), math.min(h0, hi))
-    }
-    def numValue(v: Any): Option[Long] = v match {
-      case n: Number => Some(n.longValue)
-      case other => other match {
-        case d: java.sql.Date       => Some(d.toLocalDate.toEpochDay)
-        case d: java.time.LocalDate => Some(d.toEpochDay)
-        case _                      => None
-      }
-    }
-    var nullPreds = List.empty[(String, Boolean)] // (col, isNull)
-    pushed.foreach {
-      case sources.EqualTo(c, v) => numValue(v).foreach(l => tighten(c, l, l))
-      case sources.GreaterThan(c, v) => numValue(v).foreach(l =>
-        tighten(c, if (l == Long.MaxValue) l else l + 1, Long.MaxValue))
-      case sources.GreaterThanOrEqual(c, v) => numValue(v).foreach(tighten(c, _, Long.MaxValue))
-      case sources.LessThan(c, v) => numValue(v).foreach(l =>
-        tighten(c, Long.MinValue, if (l == Long.MinValue) l else l - 1))
-      case sources.LessThanOrEqual(c, v) => numValue(v).foreach(tighten(c, Long.MinValue, _))
-      case sources.In(c, vs) =>
-        val ls = vs.flatMap(numValue(_).toSeq)
-        if (ls.nonEmpty) tighten(c, ls.min, ls.max)
-      case sources.IsNull(c) => nullPreds ::= (c, true)
-      case sources.IsNotNull(c) => nullPreds ::= (c, false)
-      case _ => ()
-    }
-    val fileSet = files.toSet
-    var keep: Set[String] = fileSet
-    def isDate(c: String): Boolean =
-      tableSchema.fields.find(_.name == c)
-        .exists(_.dataType == org.apache.spark.sql.types.DateType)
-    // per-column stats: integral columns via the `s` long index, date
-    // columns via the `t date` epoch-day index (unstatted files keep —
-    // absence = must-scan)
-    val stats = meta.stats.filter(st => fileSet.contains(st.file))
-    val typedStats = meta.typedStats.filter(st => fileSet.contains(st.file))
-    ranges.foreach { case (c, (lo, hi)) =>
-      val cs: Seq[(String, Long, Long)] =
-        if (isDate(c))
-          typedStats.filter(st => st.col == c && st.kind == "date")
-            .flatMap(st => scala.util.Try((st.file, st.lo.toLong, st.hi.toLong)).toOption)
-        else stats.filter(_.col == c).map(st => (st.file, st.min, st.max))
-      if (cs.nonEmpty) {
-        val statted = cs.map(_._1).toSet
-        keep = keep.intersect(
-          (files.filterNot(statted) ++
-            cs.filter { case (_, mn, mx) => mx >= lo && mn <= hi }.map(_._1)).toSet)
-      }
-    }
-    // partition-value tuples through the transforms (identity/div by
-    // range; bucket by the EqualTo/In value set — a hash has no range)
-    val specs = meta.specs
-    val partVals = meta.partVals.filter(pv => fileSet.contains(pv.file))
-    def dimKeep(d: Int, pred: Long => Boolean): Set[String] = {
-      val judged = partVals.filter(_.values.lift(d).exists(_.isDefined))
-      val valued = judged.map(_.file).toSet
-      (files.filterNot(valued) ++
-        judged.filter(_.values(d).exists(pred)).map(_.file)).toSet
-    }
-    specs.zipWithIndex.foreach { case (ps, d) =>
-      ranges.get(ps.col).foreach { case (lo, hi) =>
-        SnapshotStore.divWidth(ps.transform) match {
-          case Some(w) =>
-            keep = keep.intersect(dimKeep(d,
-              v => v >= Math.floorDiv(lo, w) && v <= Math.floorDiv(hi, w)))
-          case None if ps.transform == "identity" =>
-            keep = keep.intersect(dimKeep(d, v => v >= lo && v <= hi))
-          case None if (ps.transform == "year" || ps.transform == "month") && isDate(ps.col) =>
-            // the date range (epoch days) maps through the monotone
-            // calendar transform; beyond ±1e6 days (≈ ±2700 CE span)
-            // a bound degrades to unconstrained — sound, never narrow
-            def tx(day: Long): Long = {
-              val dte = java.time.LocalDate.ofEpochDay(day)
-              if (ps.transform == "year") dte.getYear.toLong
-              else dte.getYear.toLong * 100 + dte.getMonthValue
-            }
-            val tLo = if (lo < -1000000L) Long.MinValue else tx(lo)
-            val tHi = if (hi > 1000000L) Long.MaxValue else tx(hi)
-            keep = keep.intersect(dimKeep(d, v => v >= tLo && v <= tHi))
-          case None => SnapshotStore.bucketN(ps.transform).foreach { n =>
-            // only a point/set probe maps through a hash
-            val pts = pushed.collect {
-              case sources.EqualTo(c, v: Number) if c == ps.col => Seq(v.longValue)
-              case sources.In(c, vs) if c == ps.col =>
-                vs.collect { case x: Number => x.longValue }.toSeq
-            }.flatten
-            if (pts.nonEmpty) {
-              val bs = pts.map(SnapshotStore.bucketValue(_, n)).toSet
-              keep = keep.intersect(dimKeep(d, bs.contains))
-            }
-          }
-        }
-      }
-    }
-    // null counts (IS NULL: nulls=0 prunes; IS NOT NULL: nulls=rows)
-    val nullStats = meta.nullStats
-    val rowCounts = meta.rowCounts
-    nullPreds.foreach { case (c, isNull) =>
-      val byFile = nullStats.filter(_.col == c).map(st => st.file -> st.nulls).toMap
-      keep = keep.intersect(files.filter { f =>
-        byFile.get(f) match {
-          case None => true
-          case Some(n) => if (isNull) n > 0L else rowCounts.get(f).forall(_ != n)
-        }
-      }.toSet)
-    }
-    val keptFiles = files.filter(keep).sorted
+    val keptFiles = FilePrune.keep(meta, pushed.toSeq.flatMap(boundOf))
     val limited = limit match {
       case Some(n) if pushed.isEmpty && !grouped =>
         val rc = meta.rowCounts
@@ -623,7 +481,7 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
         b.result()
       case _ => keptFiles
     }
-    new StoreScan(dir, limited, required, tableSchema, specs, partVals, grouped)
+    new StoreScan(dir, limited, required, tableSchema, meta.specs, meta.partVals, grouped)
   }
 }
 
@@ -643,7 +501,7 @@ private[sources] class StoreAggScan(dir: String, schema: StructType,
 /** One task per file (default) or per concrete partition tuple
   * (`partitionGrouped` — each task owns one tuple's files and reports
   * it as the partition key, the storage-partitioned-join shape). */
-private[sources] class StoreScan(dir: String, files: Seq[String],
+private[graft] class StoreScan(dir: String, val files: Seq[String],
     readSchemaV: StructType, tableSchema: StructType,
     specs: Seq[SnapshotStore.PartitionSpec],
     partVals: Seq[SnapshotStore.FilePartition], grouped: Boolean)

@@ -101,7 +101,8 @@ class NullStatsSpec extends SparkSuite {
     VersionedLoad.bootstrap(spark, t, df, asOfMicros = 1000L, statsCols = Seq("d"))
     val empty = SnapshotStore.readNullFilter(spark, t, "d", isNull = true).get
     assert(empty.count() == 0L && empty.columns.toSeq == Seq("k", "d"))
-    assert(SnapshotStore.fileNullStats(spark, t).forall(_.nulls == 0L))
-    assert(SnapshotStore.fileRowCounts(spark, t).values.sum == 2L)
+    val meta = SnapshotStore.tableMeta(spark, t, None).get
+    assert(meta.nullStats.forall(_.nulls == 0L))
+    assert(meta.rowCounts.values.sum == 2L)
   }
 }

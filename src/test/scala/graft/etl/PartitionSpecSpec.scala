@@ -47,7 +47,7 @@ class PartitionSpecSpec extends SparkSuite {
     val vLines = m.filter(_.startsWith("v ")).map(_.split(" ", 3))
     assert(vLines.map(_(1).toLong).toSet == Set(1995L, 1997L),
       s"one v line per year-file expected, got $m")
-    assert(SnapshotStore.partitionSpecOf(spark, t) == Some(yearSpec))
+    assert(SnapshotStore.partitionSpecsOf(spark, t).headOption == Some(yearSpec))
   }
 
   test("readPartitionRange never opens an out-of-partition file (destroyed-file device) and still filters exactly") {
@@ -114,7 +114,7 @@ class PartitionSpecSpec extends SparkSuite {
       s"only the new file is valued under the evolved spec, got $m1")
     // the old manifest still prunes by ITS spec: destroy the new file,
     // then a v0-pinned year read works and v0's spec is still year
-    assert(SnapshotStore.partitionSpecOf(spark, t, Some(0L)) == Some(yearSpec))
+    assert(SnapshotStore.partitionSpecsOf(spark, t, Some(0L)).headOption == Some(yearSpec))
     val f99 = v1.find(_(1).toLong == 199906L).get(2)
     destroy(t, f99)
     assert(SnapshotStore.readPartitionRange(spark, t, 1995L, 1995L, version = Some(0L)).get
@@ -161,7 +161,7 @@ class PartitionSpecSpec extends SparkSuite {
       partitionSpec = Some(yearSpec))
     VersionedLoad.compact(spark, t, numFiles = 2, asOfMicros = Some(1000L),
       sortBy = Some("d"))
-    assert(SnapshotStore.partitionSpecOf(spark, t) == Some(yearSpec),
+    assert(SnapshotStore.partitionSpecsOf(spark, t).headOption == Some(yearSpec),
       "compact is layout maintenance — the spec survives the rewrite")
     // the rewrite's sorted-by-date files are single-valued again → valued
     assert(SnapshotStore.readPartitionRange(spark, t, 1995L, 1995L).get.count() == 2)

@@ -101,4 +101,26 @@ class ResolutionCostSpec extends SparkSuite {
     assert(SnapshotStore.readVersion(spark, t, 0L).isEmpty,
       "a version whose primary _SUCCESS is gone must resolve None even when memoized")
   }
+
+  test("memo: a table dropped and recreated at the same path resolves its new snapshot when the manifest key collides") {
+    val t = freshTable()
+    SnapshotStore.promote(spark, t, Seq((1L, "a")).toDF("k", "v")): Unit
+    assert(SnapshotStore.currentVersion(spark, t).contains(0L)) // memoizes manifest-0
+    val root = new org.apache.hadoop.fs.Path(t)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m0 = new org.apache.hadoop.fs.Path(root, f"manifest-${0L}%020d")
+    val (len, mtime) = { val st = fs.getFileStatus(m0); (st.getLen, st.getModificationTime) }
+    // drop and recreate: the new manifest-0 has the same length (same
+    // schema, same-width snapshot name) and names a NEW snapshot dir;
+    // pin its mtime to the old one so the memo key (path, length,
+    // mtime) collides, as a recreate within the clock's granularity does
+    assert(fs.delete(root, true))
+    SnapshotStore.promote(spark, t, Seq((2L, "b")).toDF("k", "v")): Unit
+    fs.setTimes(m0, mtime, -1)
+    val st = fs.getFileStatus(m0)
+    assert(st.getLen == len && st.getModificationTime == mtime, "the memo key must collide")
+    assert(SnapshotStore.currentVersion(spark, t).contains(0L),
+      "a stale memo hit whose snapshot is gone must be re-read, not read as 'never committed'")
+    assert(SnapshotStore.read(spark, t).get.as[(Long, String)].collect().toSeq == Seq(2L -> "b"))
+  }
 }

@@ -146,7 +146,7 @@ class TypedStatsSpec extends SparkSuite {
       .toDF("k", "at")
     VersionedLoad.bootstrap(spark, t, df.repartitionByRange(2, col("k")),
       asOfMicros = 1000L, statsCol = Some("k"), statsCols = Seq("at"))
-    val m = SnapshotStore.currentTypedFileStats(spark, t).filter(_.kind == "ts")
+    val m = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.typedStats).filter(_.kind == "ts")
     assert(m.size == 2, s"one ts stat line per file, got $m")
     // exact filter inside the candidate: only k=2's instant qualifies
     val lo = ts("1995-03-01 00:00:00").getTime * 1000L
@@ -210,10 +210,10 @@ class TypedStatsSpec extends SparkSuite {
   test("a commit without stat columns still carries reused files' stats forward (restore keeps the index)") {
     val t = bootstrapTyped()
     VersionedLoad.restore(spark, t, version = 0L, asOfMicros = Some(2000L))
-    assert(SnapshotStore.currentFileStats(spark, t).count(_.col == "k") == 2,
+    assert(SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.stats).count(_.col == "k") == 2,
       "long stats survive a metadata-only commit")
-    assert(SnapshotStore.currentTypedFileStats(spark, t).count(_.kind == "date") == 2 &&
-      SnapshotStore.currentTypedFileStats(spark, t).count(_.kind == "str") == 2,
+    val typed = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.typedStats)
+    assert(typed.count(_.kind == "date") == 2 && typed.count(_.kind == "str") == 2,
       "typed stats survive a metadata-only commit")
   }
 }

@@ -119,12 +119,12 @@ class VersionedDeleteSpec extends SparkSuite {
       .as[(Long, String)].collect().sorted.toSeq ==
       Seq(1L -> "a", 2L -> "b", 100L -> "c", 101L -> "d"))
     // spans are disjoint after the clustered rewrite
-    val spans = SnapshotStore.currentFileStats(spark, t)
+    val spans = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.stats)
       .filter(_.col == "k").map(st => (st.min, st.max)).sorted
     assert(spans.size == 2 && spans(0)._2 < spans(1)._1,
       s"disjoint per-file spans expected, got $spans")
     // destroyed-file device: a low-range read opens exactly one file
-    val highFile = SnapshotStore.currentFileStats(spark, t)
+    val highFile = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.stats)
       .filter(_.col == "k").maxBy(_.min).file
     java.nio.file.Files.write(new java.io.File(new java.io.File(t), highFile).toPath,
       "not a parquet file".getBytes("UTF-8"))
@@ -151,8 +151,9 @@ class VersionedDeleteSpec extends SparkSuite {
     // each Morton quadrant file spans ≤ ~half of each dimension (slack
     // for the range sampler's approximate quartile bounds); round-robin
     // spanned the full 0..15 on both
-    val kSpans  = SnapshotStore.currentFileStats(spark, t).filter(_.col == "k")
-    val k2Spans = SnapshotStore.currentFileStats(spark, t).filter(_.col == "k2")
+    val stats   = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.stats)
+    val kSpans  = stats.filter(_.col == "k")
+    val k2Spans = stats.filter(_.col == "k2")
     assert(kSpans.size == 4 && k2Spans.size == 4)
     assert(kSpans.forall(st => st.max - st.min <= 9),
       s"k narrowed per file, got ${kSpans.map(st => (st.min, st.max))}")
@@ -182,7 +183,7 @@ class VersionedDeleteSpec extends SparkSuite {
       asOfMicros = 1000L, statsCol = Some("k"))
     // destroy the high file: a composite-key batch confined to the low
     // file's k-range must never open it during touched-file location
-    val highFile = SnapshotStore.currentFileStats(spark, t)
+    val highFile = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.stats)
       .filter(_.col == "k").maxBy(_.min).file
     java.nio.file.Files.write(new java.io.File(new java.io.File(t), highFile).toPath,
       "not a parquet file".getBytes("UTF-8"))
@@ -252,7 +253,7 @@ class VersionedDeleteSpec extends SparkSuite {
       asOfMicros = 1000L, statsCol = Some("id"))
     // destroy the high file: a batch whose keys sort entirely below its
     // lo prefix must never open it during touched-file location
-    val highFile = SnapshotStore.currentTypedFileStats(spark, t)
+    val highFile = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.typedStats)
       .filter(st => st.col == "id" && st.kind == "str")
       .maxBy(_.lo).file
     java.nio.file.Files.write(new java.io.File(new java.io.File(t), highFile).toPath,
@@ -278,7 +279,7 @@ class VersionedDeleteSpec extends SparkSuite {
       .toDF("ds", "v").selectExpr("CAST(ds AS DATE) AS d", "v")
     VersionedLoad.bootstrap(spark, t, df.repartitionByRange(2, col("d")),
       asOfMicros = 1000L, statsCol = Some("d"))
-    val highFile = SnapshotStore.currentTypedFileStats(spark, t)
+    val highFile = SnapshotStore.tableMeta(spark, t, None).toSeq.flatMap(_.typedStats)
       .filter(st => st.col == "d" && st.kind == "date")
       .maxBy(_.lo.toLong).file
     java.nio.file.Files.write(new java.io.File(new java.io.File(t), highFile).toPath,
@@ -310,7 +311,7 @@ class VersionedDeleteSpec extends SparkSuite {
     // destroy the untouched high file AFTER the merge: the value-exact
     // CDC's from-side read must prune it (the new rows' key span
     // cannot intersect the high file's)
-    val highFile = SnapshotStore.filesForVersionTypedStats(spark, t, 0L)
+    val highFile = SnapshotStore.tableMeta(spark, t, Some(0L)).toSeq.flatMap(_.typedStats)
       .filter(st => st.col == "id" && st.kind == "str").maxBy(_.lo).file
     java.nio.file.Files.write(new java.io.File(new java.io.File(t), highFile).toPath,
       "not a parquet file".getBytes("UTF-8"))

@@ -450,14 +450,15 @@ class FactStreamSpec extends SparkSuite {
       stage("p2", 200L -> "c")
       q.processAllAvailable()
     } finally q.stop()
-    assert(SnapshotStore.partitionSpecOf(spark, tbl) ==
+    assert(SnapshotStore.partitionSpecsOf(spark, tbl).headOption ==
       Some(SnapshotStore.PartitionSpec("div100", "k")),
       "the sink's incremental commits carry the declared spec")
-    val vals = SnapshotStore.filePartitionsOf(spark, tbl).map(_.value).toSet
+    val partVals = SnapshotStore.tableMeta(spark, tbl, None).toSeq.flatMap(_.partVals)
+    val vals = partVals.map(_.value).toSet
     assert(vals.contains(2L), s"the post-declaration delivery recorded its value, got $vals")
     // and the pruned read works end to end: destroy the new file, read
     // the old partition (pre-declaration files are unvalued and scan)
-    val f2 = SnapshotStore.filePartitionsOf(spark, tbl).find(_.value == 2L).get.file
+    val f2 = partVals.find(_.value == 2L).get.file
     java.nio.file.Files.write(new java.io.File(new java.io.File(tbl), f2).toPath,
       "not a parquet file".getBytes("UTF-8"))
     assert(SnapshotStore.readPartitionRange(spark, tbl, 1L, 1L).get.count() == 2,
