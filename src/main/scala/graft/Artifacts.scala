@@ -82,4 +82,25 @@ object Artifacts {
     if (d == null) 0L
     else d.remainder(new java.math.BigDecimal(1000000000000000L)).longValueExact()
   }
+
+  /** The key a content-fingerprint memo is stored under: `df`'s analyzed
+    * plan hash, its planned size in bytes, every input file's (path,
+    * length) and the newest input mtime. The plan hash alone is PATH
+    * identity and the size misses an equal-size rewrite; the mtime
+    * moves on any in-place rewrite of a file under the same name, so
+    * the memo re-fingerprints (CorpusFpMemoSpec pins this for both
+    * memos, SimOps.corpusFp and GraphOps.coGraph). Driver-side metadata
+    * only: one getFileStatus per input file, never a data scan. */
+  def inputsKey(df: org.apache.spark.sql.DataFrame): (Int, BigInt, Int, Long) = {
+    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
+    var maxM = 0L
+    val idHash = df.inputFiles.toSeq.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val st = scala.util.Try(p.getFileSystem(hconf).getFileStatus(p)).toOption
+      st.foreach(s => maxM = math.max(maxM, s.getModificationTime))
+      (f, st.map(_.getLen).getOrElse(-1L))
+    }.hashCode
+    (df.queryExecution.analyzed.semanticHash(),
+      df.queryExecution.optimizedPlan.stats.sizeInBytes, idHash, maxM)
+  }
 }

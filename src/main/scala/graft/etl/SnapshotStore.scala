@@ -280,7 +280,7 @@ object SnapshotStore {
     * IS NULL / IS NOT NULL skipping index [[readNullFilter]] prunes
     * with — and `c <base64(StructType.json)>`, the commit's recorded
     * TABLE schema (readers plan with zero footer reads; see
-    * readManifest); final line = the `end`
+    * readParquet); final line = the `end`
     * terminator (required for the manifest to commit — see
     * [[ManifestData]]). Unknown line prefixes are ignored, so a reader
     * from before a line type existed still resolves the manifest (and
@@ -545,31 +545,38 @@ object SnapshotStore {
       .map(n => s"$snap/$n")
   }
 
-  private def readManifest(spark: SparkSession, tgt: Path, fs: FileSystem,
-      m: ManifestData): DataFrame = {
-    val paths =
+  /** A committed manifest's rows: its explicit file list, or — with none
+    * — its snapshot DIRECTORY as the one path (more than 32 explicit
+    * paths would make Spark's file index launch a listing job). */
+  private def readManifest(spark: SparkSession, tgt: Path, m: ManifestData): DataFrame =
+    readParquet(spark,
       if (m.files.nonEmpty) m.files.map(f => new Path(tgt, f).toString)
-      else Seq(new Path(tgt, m.snap).toString)
-    m.schema match {
-      // recorded table schema (r17, the Delta schema-in-the-log shape):
-      // the read plans with ZERO parquet-footer reads — at 100k files
-      // the mergeSchema fallback's one-footer-per-file planning cost is
-      // the largest remaining metadata-scale term, and the recorded
-      // schema removes it. A file that predates an additive evolution
-      // projects its missing column as null, exactly like the merged
-      // read; a type conflict fails loudly AT SCAN (the additive-only
-      // evolution contract, enforced at promote since r17).
+      else Seq(new Path(tgt, m.snap).toString), m.schema)
+
+  /** The one choice between a commit's recorded schema and the
+    * mergeSchema fallback, for every store read.
+    *
+    * Recorded table schema (r17, the Delta schema-in-the-log shape):
+    * the read plans with ZERO parquet-footer reads and no schema-
+    * inference job — at 100k files the fallback's one-footer-per-file
+    * planning cost is the largest remaining metadata-scale term. A file
+    * that predates an additive evolution projects its missing column as
+    * null, exactly like the merged read; a type conflict fails loudly AT
+    * SCAN (the additive-only evolution contract, enforced at promote
+    * since r17).
+    *
+    * mergeSchema fallback (pre-r17 manifests, undecodable c line, or a
+    * caller with no manifest): a file list may mix schema generations
+    * after an ADDITIVE evolution — the union schema projects the
+    * missing column as null in old files. Cost: one footer read per
+    * listed file. Conflicting TYPE changes on one column fail the read
+    * loudly — evolution here is additive by contract, never coercive. */
+  private def readParquet(spark: SparkSession, paths: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    schema match {
       case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      // mergeSchema fallback (pre-r17 manifests, undecodable c line): a
-      // version's file list may mix schema generations after an
-      // ADDITIVE evolution — the union schema projects the missing
-      // column as null in old files. Cost: one footer read per listed
-      // file. Conflicting TYPE changes on one column fail the read
-      // loudly — evolution here is additive by contract, never
-      // coercive.
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
-  }
 
   /** The newest COMMITTED manifest — walks newest-first and stops at the
     * first manifest that resolves (normally the very first). */
@@ -640,19 +647,9 @@ object SnapshotStore {
     * [[currentFiles]]) lazily. Empty list → None. Footer-merging (the
     * caller has no manifest to take a recorded schema from); the
     * manifest-aware readers route through the recorded schema
-    * instead — see readManifest. */
+    * instead — see readParquet. */
   def readFiles(spark: SparkSession, dir: String, files: Seq[String]): Option[DataFrame] =
     readFilesAs(spark, dir, files, None)
-
-  /** The recorded table schema of a committed version (`None` = head).
-    * Metadata-only — one memoized manifest resolve, no file opened.
-    * None when nothing is committed, the manifest predates recorded
-    * schemas (pre-r17), or its `c` line is undecodable. */
-  def schemaForVersion(spark: SparkSession, dir: String,
-      version: Option[Long]): Option[org.apache.spark.sql.types.StructType] = {
-    val (fs, tgt) = fsOf(spark, dir)
-    manifestFor(fs, tgt, version).flatMap(_.schema)
-  }
 
   /** [[readFiles]] planned with `version`'s recorded manifest schema
     * (`None` = head) when present — zero footer reads and, unlike the
@@ -668,20 +665,13 @@ object SnapshotStore {
     * back to mergeSchema when no schema was recorded. */
   def readFilesForVersion(spark: SparkSession, dir: String, version: Option[Long],
       files: Seq[String]): Option[DataFrame] =
-    readFilesAs(spark, dir, files, schemaForVersion(spark, dir, version))
+    readFilesAs(spark, dir, files, tableSchema(spark, dir, version))
 
-  /** [[readFiles]] with an optional RECORDED schema (from the resolved
-    * manifest's `c` line): schema given → zero footer reads at plan
-    * time; absent → mergeSchema fallback. */
+  /** [[readFiles]] with an optional RECORDED schema; see [[readParquet]]. */
   private def readFilesAs(spark: SparkSession, dir: String, files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): Option[DataFrame] =
     if (files.isEmpty) None
-    else Some(schema match {
-      case Some(s) => spark.read.schema(s)
-        .parquet(files.map(f => new Path(dir, f).toString): _*)
-      case None => spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => new Path(dir, f).toString): _*) // see readManifest
-    })
+    else Some(readParquet(spark, files.map(f => new Path(dir, f).toString), schema))
 
   /** Resolve the pruned readers' target manifest: the committed head,
     * or — when `version` is given — exactly that retained committed
@@ -970,7 +960,7 @@ object SnapshotStore {
     * committed. Lazy — see the read-laziness contract above. */
   def read(spark: SparkSession, dir: String): Option[DataFrame] = {
     val (fs, tgt) = fsOf(spark, dir)
-    currentManifest(fs, tgt).map { case (_, m) => readManifest(spark, tgt, fs, m) }
+    currentManifest(fs, tgt).map { case (_, m) => readManifest(spark, tgt, m) }
   }
 
   /** Time travel: read exactly version `id` (committed), if its manifest
@@ -980,7 +970,7 @@ object SnapshotStore {
     val (fs, tgt) = fsOf(spark, dir)
     manifestFiles(fs, tgt).find(_._1 == id)
       .flatMap { case (_, p) => resolve(fs, tgt, p) }
-      .map(m => readManifest(spark, tgt, fs, m))
+      .map(m => readManifest(spark, tgt, m))
   }
 
   /** Timestamp travel: the newest committed version whose pinned as-of
@@ -996,7 +986,7 @@ object SnapshotStore {
     manifestFiles(fs, tgt).iterator
       .map { case (_, p) => resolve(fs, tgt, p) }
       .collectFirst { case Some(m) if m.asOf.exists(_ <= asOfMicros) =>
-        readManifest(spark, tgt, fs, m) }
+        readManifest(spark, tgt, m) }
   }
 
   /** Atomically claim `p` by create-no-overwrite and write `content`.
@@ -1381,7 +1371,7 @@ object SnapshotStore {
     val statLines = (ownLines ++ carriedLines).map("\n" + _).mkString
     val specLine  = effSpecs.map(ps => s"\np ${ps.transform} ${ps.col}").mkString
     val partLines = (ownPartLines ++ carriedPartLines).map("\n" + _).mkString
-    // recorded table schema (r17 — see readManifest): a full rewrite
+    // recorded table schema (r17 — see readParquet): a full rewrite
     // records the delta's own schema; a file-reuse commit records
     // prev ∪ delta additively (type conflicts throw — better at write
     // than the fallback's at-read failure). Reuse over a manifest with
@@ -1583,7 +1573,7 @@ object SnapshotStore {
       val fence = acquireFence(spark, dir)
       val (fs, tgt) = fsOf(spark, dir)
       val base = currentManifest(fs, tgt)
-      val df = compute(base.map { case (_, m) => readManifest(spark, tgt, fs, m) })
+      val df = compute(base.map { case (_, m) => readManifest(spark, tgt, m) })
       try {
         return promote(spark, dir, df, keep = keep, asOfMicros = asOfMicros,
           fence = Some(fence), expectCurrent = Some(base.map(_._1).getOrElse(NoVersion)))

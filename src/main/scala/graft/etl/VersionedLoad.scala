@@ -333,7 +333,7 @@ object VersionedLoad {
           // in that union space: a column absent from a side's files is
           // null there under mergeSchema, so extending both sides with
           // typed nulls compares exactly what a full-table read would.
-          val toSchema = SnapshotStore.schemaForVersion(spark, table, Some(toVersion))
+          val toSchema = SnapshotStore.tableSchema(spark, table, Some(toVersion))
             .getOrElse(SnapshotStore.readFiles(spark, table, toFiles.toSeq.sorted).get.schema)
           val toHave = toSchema.fieldNames.toSet
           val dropped = extra.filterNot(toHave)
@@ -492,7 +492,7 @@ object VersionedLoad {
     // allowMissingColumns: ADDITIVE schema evolution — a batch carrying
     // a new column unions with survivors that predate it (null there),
     // and the store's mergeSchema reads project it as null in every
-    // reused file; see SnapshotStore.readManifest
+    // reused file; see SnapshotStore.readParquet
     SnapshotStore.promote(spark, table, batch.unionByName(survivors, allowMissingColumns = true),
       keep = keep, asOfMicros = asOfMicros, reuseFiles = untouched,
       statsCol = statsCol, statsCols = statsCols, expectCurrent = expect, txn = txn)

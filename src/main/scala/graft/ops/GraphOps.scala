@@ -726,19 +726,11 @@ object GraphOps {
     * follows it), which is why this needs no byte-determinism care
     * and no oracle read_parquet. Existence is gated on the _SUCCESS
     * marker, so a torn earlier write rebuilds. */
-  // single-slot fingerprint memo keyed by (analyzed-plan semantic
-  // hash, scan size in bytes): all nine graph ops derive `li`
-  // identically per corpus, so a sweep pays the fingerprint scan once,
-  // not nine times (the SimOps.cachedEmb one-entry-cache discipline).
-  // The plan hash alone is PATH identity — an in-place corpus rewrite
-  // would hit the memo and defeat the content fingerprint — so the
-  // byte size rides in the key: any rewrite that changes a byte count
-  // misses (a same-path same-size different-content rewrite inside one
-  // JVM session remains out of scope, as it is for Spark's own file
-  // index caching — the remediation is the same as Spark's `REFRESH
-  // TABLE`: drop the memo, here by setting `fpMemo = None` before the
-  // next coGraph call, so the fingerprint re-scans the rewritten bytes)
-  private var fpMemo: Option[((Int, BigInt), Long)] = None
+  // single-slot fingerprint memo keyed by graft.Artifacts.inputsKey:
+  // all nine graph ops derive `li` identically per corpus, so a sweep
+  // pays the fingerprint scan once, not nine times (the SimOps.corpusFp
+  // discipline), and an in-place rewrite of lineitem re-fingerprints
+  private var fpMemo: Option[((Int, BigInt, Int, Long), Long)] = None
 
   private[ops] def coGraph(
       spark: org.apache.spark.sql.SparkSession, li: DataFrame): (DataFrame, DataFrame) =
@@ -751,8 +743,7 @@ object GraphOps {
       // into a job failure) and folds to a long driver-side. No oracle
       // mirrors this value — the oracles derive the edges from
       // lineitem independently.
-      val memoKey = (li.queryExecution.analyzed.semanticHash(),
-        li.queryExecution.optimizedPlan.stats.sizeInBytes)
+      val memoKey = graft.Artifacts.inputsKey(li)
       val fp = fpMemo match {
         case Some((k, v)) if k == memoKey => v
         case _ =>

@@ -145,30 +145,13 @@ object SimOps {
     * discipline, r18): every artifact-backed consumer — the recall
     * evals, knn graph, semantic dedup, and (since r18) the ivf_kmeans/
     * pq/pq8 retrieval paths — pays the fingerprint scan once per
-    * session instead of once per artifact access. Keyed by (analyzed
-    * plan semantic hash, scan size in bytes, source-file modification
-    * signal): the r18 key alone could serve a stale fingerprint — and
-    * thereby resolve a stale persisted quantizer/codebook — for a
-    * corpus rewritten IN PLACE to the same plan and byte size, so
-    * (r19, the manifestMemo discipline next door) the key also folds
-    * in every input file's (path, length) from the scan plus the max
-    * mtime, re-fingerprinting whenever the underlying files move.
-    * CorpusFpMemoSpec pins the equal-size in-place rewrite. */
+    * session instead of once per artifact access. Keyed by
+    * [[graft.Artifacts.inputsKey]], so a corpus rewritten IN PLACE to
+    * the same plan and byte size re-fingerprints instead of resolving
+    * a stale persisted quantizer/codebook. */
   private var corpusFpMemo: Option[((Int, BigInt, Int, Long), Long)] = None
   private[ops] def corpusFp(emb: DataFrame): Long = synchronized {
-    // driver-side metadata only: one getFileStatus per input file (the
-    // corpus is O(few) parquet files; at scale a listing the planner
-    // already did — never a data scan)
-    val hconf = emb.sparkSession.sparkContext.hadoopConfiguration
-    var maxM = 0L
-    val idHash = emb.inputFiles.toSeq.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = scala.util.Try(p.getFileSystem(hconf).getFileStatus(p)).toOption
-      st.foreach(s => maxM = math.max(maxM, s.getModificationTime))
-      (f, st.map(_.getLen).getOrElse(-1L))
-    }.hashCode
-    val key = (emb.queryExecution.analyzed.semanticHash(),
-      emb.queryExecution.optimizedPlan.stats.sizeInBytes, idHash, maxM)
+    val key = graft.Artifacts.inputsKey(emb)
     corpusFpMemo match {
       case Some((k, v)) if k == key => v
       case _ =>

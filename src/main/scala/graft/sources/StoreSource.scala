@@ -3,7 +3,9 @@ package graft.sources
 import java.util.{Map => JMap}
 
 import graft.etl.{FilePrune, SnapshotStore}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -12,9 +14,14 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, 
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** The versioned store as a FIRST-CLASS Spark DataSource v2 (r17):
   * `spark.read.format("graft.sources.StoreSource").load(tableDir)`
@@ -37,16 +44,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Options: `path` (table root), `version` (pin a committed version),
   * `partitionGrouped` (= "true": one task per partition-value tuple,
-  * required for the storage-partitioned join; default one task per
-  * file — better parallelism for plain scans).
+  * required for the storage-partitioned join; default: the kept files
+  * packed into tasks the way Spark packs a parquet scan's files).
+  *
+  * Reading: the kept files go to Spark's own parquet reader
+  * ([[ParquetPartitionReaderFactory]] over `FilePartition`s) — the same
+  * vectorized reader the range readers' `FileSourceScan` runs, so both
+  * store read paths share one physical reader. Batches stay columnar
+  * to the operator, the session's Hadoop conf reaches the reader, and
+  * every filter is also handed to parquet for row-group skipping on
+  * top of the manifest's file pruning.
   *
   * Scope (documented, enforced loudly): the table must carry a
   * recorded `c` schema (any r17+ commit does); files missing an
-  * additively-evolved column project it as null. The executor-side
-  * reader is Spark's own vectorized parquet reader driven per file;
-  * its simple-path initializer builds a fresh local Hadoop config, so
-  * this source targets filesystems reachable with default config
-  * (local/HDFS-default) — the store's own contract. Partitioning is
+  * additively-evolved column project it as null. Partitioning is
   * REPORTED only when every dimension is `identity` (resolvable
   * without a function catalog) or `bucket<N>` and every file carries a
   * concrete tuple; anything else degrades to unknown partitioning,
@@ -91,11 +102,9 @@ class StoreSource extends TableProvider
     }
   }
 
-  private def dirOf(options: CaseInsensitiveStringMap): String = {
-    val p = Option(options.get("path")).filter(_.nonEmpty)
-    p.getOrElse(throw new IllegalArgumentException(
-      "graft-store: .load(<table dir>) is required"))
-  }
+  private def dirOf(options: CaseInsensitiveStringMap): String =
+    Option(options.get("path")).filter(_.nonEmpty).getOrElse(
+      throw new IllegalArgumentException("graft-store: .load(<table dir>) is required"))
 
   private def versionOf(options: CaseInsensitiveStringMap): Option[Long] =
     Option(options.get("version")).map(_.toLong)
@@ -112,9 +121,7 @@ class StoreSource extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table = {
     val ci = new CaseInsensitiveStringMap(properties)
-    new StoreTable(dirOf(ci), versionOf(ci),
-      Option(ci.get("partitionGrouped")).exists(_.equalsIgnoreCase("true")),
-      schema)
+    new StoreTable(dirOf(ci), versionOf(ci), StoreTable.groupedOf(ci), schema)
   }
 }
 
@@ -146,16 +153,8 @@ private[sources] class StoreTable(dir: String, version: Option[Long],
   }
 
   override def partitioning(): Array[Transform] = {
-    val spark = SparkSession.active
-    val specs = SnapshotStore.partitionSpecsOf(spark, dir, version)
-    val mapped = specs.map { ps =>
-      ps.transform match {
-        case "identity" => Some(Expressions.identity(ps.col))
-        case t => SnapshotStore.bucketN(t).map(n => Expressions.bucket(n, ps.col))
-        // year/month/div: real transforms, but unexpressible here
-        // without a function catalog
-      }
-    }
+    val mapped = SnapshotStore.partitionSpecsOf(SparkSession.active, dir, version)
+      .map(StoreTable.transformOf)
     // ALL-OR-NOTHING like StoreScan.outputPartitioning: dropping only
     // the unexpressible dimensions would CLAIM a coarser layout the
     // files do not have — a mixed-spec table reports no partitioning
@@ -164,9 +163,19 @@ private[sources] class StoreTable(dir: String, version: Option[Long],
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new StoreScanBuilder(dir, version, grouped ||
-      Option(options.get("partitionGrouped")).exists(_.equalsIgnoreCase("true")),
-      tableSchema)
+    new StoreScanBuilder(dir, version, grouped || StoreTable.groupedOf(options), tableSchema)
+}
+
+private[sources] object StoreTable {
+  def groupedOf(options: CaseInsensitiveStringMap): Boolean =
+    Option(options.get("partitionGrouped")).exists(_.equalsIgnoreCase("true"))
+
+  /** A spec dimension as a V2 transform when Catalyst can resolve it
+    * without a function catalog: identity and bucket<N>. year/month/div
+    * are real transforms, but unexpressible here. */
+  def transformOf(ps: SnapshotStore.PartitionSpec): Option[Transform] =
+    if (ps.transform == "identity") Some(Expressions.identity(ps.col))
+    else SnapshotStore.bucketN(ps.transform).map(n => Expressions.bucket(n, ps.col))
 }
 
 /** The write side of the connector. Append (the default) promotes the
@@ -247,6 +256,7 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
 
   private var required: StructType = tableSchema
   private var pushed: Array[sources.Filter] = Array.empty
+  private var offered: Array[sources.Filter] = Array.empty
   private var aggAnswer: Option[(StructType, Array[InternalRow])] = None
   private var limit: Option[Int] = None
 
@@ -274,16 +284,10 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
   private lazy val metaOpt: Option[SnapshotStore.TableMeta] =
     SnapshotStore.tableMeta(SparkSession.active, dir, version)
 
+  // Spark's parquet reader takes the required schema as given: nested
+  // pruning and the empty projection of count(*) included
   override def pruneColumns(requiredSchema: StructType): Unit =
-    // preserve the table's field order — the reader builds rows in
-    // readSchema order, and an empty projection (count(*)) keeps one
-    // narrowest column to drive row counts
-    required = {
-      val want = requiredSchema.fieldNames.toSet
-      val kept = StructType(tableSchema.fields.filter(f => want.contains(f.name)))
-      if (kept.fields.nonEmpty) kept
-      else StructType(tableSchema.fields.sortBy(_.dataType.defaultSize).take(1))
-    }
+    required = requiredSchema
 
   /** The bound a pushed filter puts on the manifest, if any index can
     * act on it. */
@@ -307,7 +311,9 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
     // a filter is "pushed" when some manifest index can act on it; it
     // is ALWAYS also returned as residual (the parquet-source pattern:
-    // best-effort pushdown, exact re-application on top)
+    // best-effort pushdown, exact re-application on top). Every offered
+    // filter also goes to the parquet reader for row-group skipping.
+    offered = filters
     pushed = filters.filter(boundOf(_).isDefined)
     filters
   }
@@ -471,17 +477,12 @@ private[sources] class StoreScanBuilder(dir: String, version: Option[Long],
     val keptFiles = FilePrune.keep(meta, pushed.toSeq.flatMap(boundOf))
     val limited = limit match {
       case Some(n) if pushed.isEmpty && !grouped =>
-        val rc = meta.rowCounts
-        var acc = 0L
-        val b = Seq.newBuilder[String]
-        val it = keptFiles.iterator
-        while (it.hasNext && acc < n) {
-          val f = it.next(); b += f; acc += rc.getOrElse(f, 0L)
-        }
-        b.result()
+        val rowsBefore = keptFiles.scanLeft(0L)(_ + meta.rowCounts.getOrElse(_, 0L))
+        keptFiles.zip(rowsBefore).takeWhile(_._2 < n).map(_._1)
       case _ => keptFiles
     }
-    new StoreScan(dir, limited, required, tableSchema, meta.specs, meta.partVals, grouped)
+    new StoreScan(dir, limited, required, tableSchema, meta.specs, meta.partVals,
+      grouped, offered)
   }
 }
 
@@ -498,13 +499,20 @@ private[sources] class StoreAggScan(dir: String, schema: StructType,
     s"graft-store $dir metadata-only aggregate (${resultRows.length} rows from manifest stats)"
 }
 
-/** One task per file (default) or per concrete partition tuple
+/** One task per packed run of kept files (default, Spark's own
+  * `FilePartition` packing) or per concrete partition tuple
   * (`partitionGrouped` — each task owns one tuple's files and reports
-  * it as the partition key, the storage-partitioned-join shape). */
+  * it as the partition key, the storage-partitioned-join shape). The
+  * files are read by Spark's own [[ParquetPartitionReaderFactory]], the
+  * reader the range readers' `FileSourceScan` uses too: vectorized
+  * batches straight to the operator, the session's Hadoop conf, and
+  * every offered filter handed to parquet so row groups whose footer
+  * stats rule it out are skipped. */
 private[graft] class StoreScan(dir: String, val files: Seq[String],
     readSchemaV: StructType, tableSchema: StructType,
     specs: Seq[SnapshotStore.PartitionSpec],
-    partVals: Seq[SnapshotStore.FilePartition], grouped: Boolean)
+    partVals: Seq[SnapshotStore.FilePartition], grouped: Boolean,
+    filters: Array[sources.Filter])
     extends Scan with Batch with SupportsReportPartitioning {
 
   override def readSchema(): StructType = readSchemaV
@@ -525,143 +533,84 @@ private[graft] class StoreScan(dir: String, val files: Seq[String],
       .sortBy(_._1.mkString(",")))
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
+  private lazy val partitions: Array[InputPartition] = {
+    val spark = SparkSession.active
+    // each kept file is one whole-file split; length and mtime come from
+    // ONE listing per distinct snapshot directory, not a stat per file
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val st: Map[String, FileStatus] = files.groupBy(new Path(root, _).getParent).flatMap {
+      case (parent, inDir) =>
+        val listed = fs.listStatus(parent).map(s => s.getPath.getName -> s).toMap
+        inDir.map(f => f -> listed.getOrElse(new Path(f).getName,
+          throw new java.io.FileNotFoundException(
+            s"graft-store: $dir/$f is in the manifest but not on disk")))
+    }
+    def split(f: String) = PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(st(f).getPath), 0L, st(f).getLen, Array.empty[String],
+      st(f).getModificationTime, st(f).getLen)
     if (grouped && tuples.isDefined)
-      tuples.get.map { case (key, fs) =>
+      tuples.get.zipWithIndex.map { case ((key, inTuple), i) =>
         // per-dimension key value types match the reported transform's
         // result type: identity → long (the column), bucket → int (the
         // V2 bucket function's resultType) — a mismatched partition-key
         // row type would break the planner's value comparisons
         val typed: Seq[Any] = key.zip(specs).map { case (v, ps) =>
-          if (SnapshotStore.bucketN(ps.transform).isDefined) Int.box(v.toInt)
-          else Long.box(v)
+          if (SnapshotStore.bucketN(ps.transform).isDefined) Int.box(v.toInt) else Long.box(v)
         }
-        StoreKeyedPartition(fs.map(f => new Path(dir, f).toString), typed)
+        new KeyedFilePartition(i, inTuple.map(split).toArray, InternalRow.fromSeq(typed))
           : InputPartition
       }.toArray
-    else files.map(f =>
-      StoreFilePartition(Seq(new Path(dir, f).toString)): InputPartition).toArray
+    else FilePartition.getFilePartitions(spark, files.map(split).sortBy(-_.length),
+      FilePartition.maxSplitBytes(spark,
+        Seq(PartitionDirectory(InternalRow.empty, st.values.toArray)))).toArray
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   /** Reported only for dimensions Catalyst can resolve WITHOUT a
-    * function catalog (identity over a LONG column — the partition key
-    * rows carry longs) plus bucket<N>; year/month/div degrade to
-    * unknown partitioning, never a wrong report. */
+    * function catalog ([[StoreTable.transformOf]]), identity only over
+    * a LONG column (the partition key rows carry longs); anything else
+    * degrades to unknown partitioning, never a wrong report. */
   override def outputPartitioning(): Partitioning = {
-    def reportable(ps: SnapshotStore.PartitionSpec): Boolean =
-      (ps.transform == "identity" &&
-        tableSchema.fields.find(_.name == ps.col)
-          .exists(_.dataType == org.apache.spark.sql.types.LongType)) ||
-      SnapshotStore.bucketN(ps.transform).isDefined
-    if (grouped && tuples.exists(_.nonEmpty) && specs.forall(reportable))
-      new KeyGroupedPartitioning(
-        specs.map(ps => ps.transform match {
-          case "identity" => Expressions.identity(ps.col)
-            : org.apache.spark.sql.connector.expressions.Expression
-          case t => Expressions.bucket(SnapshotStore.bucketN(t).get, ps.col)
-        }).toArray,
-        tuples.get.size)
-    else new UnknownPartitioning(
-      if (grouped && tuples.isDefined) tuples.get.size else files.size)
+    val report = specs.flatMap(ps => StoreTable.transformOf(ps).filter(_ =>
+      ps.transform != "identity" || tableSchema.fields.find(_.name == ps.col)
+        .exists(_.dataType == org.apache.spark.sql.types.LongType)))
+    if (grouped && tuples.exists(_.nonEmpty) && report.size == specs.size)
+      new KeyGroupedPartitioning(report.toArray, tuples.get.size)
+    else new UnknownPartitioning(partitions.length)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new StoreReaderFactory(readSchemaV)
-}
-
-private[sources] case class StoreFilePartition(paths: Seq[String])
-    extends InputPartition
-
-private[sources] case class StoreKeyedPartition(paths: Seq[String],
-    key: Seq[Any]) extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(key.toArray)
-}
-
-/** Executor-side: Spark's own vectorized parquet reader driven per
-  * file (the simple-path initializer — fresh local Hadoop config, the
-  * documented scope), required columns pushed into the parquet
-  * projection, rows copied out of the reused columnar batch, columns a
-  * file predates projected as null. */
-private[sources] class StoreReaderFactory(schema: StructType)
-    extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val paths = partition match {
-      case StoreFilePartition(ps)     => ps
-      case StoreKeyedPartition(ps, _) => ps
-      case other => throw new IllegalStateException(s"graft-store: foreign partition $other")
-    }
-    new PartitionReader[InternalRow] {
-      import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
-
-      private val queue = scala.collection.mutable.Queue(paths: _*)
-      private var reader: VectorizedParquetRecordReader = _
-      private var proj: Array[Int] = _ // output ordinal → input ordinal, -1 = null
-      private var row: InternalRow = _
-
-      /** Open the next queued file; false when none remain. */
-      private def openNext(): Boolean = {
-        if (queue.isEmpty) return false
-        val path = queue.dequeue()
-        // the file's present subset of the required columns, requested
-        // in OUR order (the vectorized reader builds its row in exactly
-        // the requested order); a column the file predates projects null
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(path), conf)
-        val pr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val fileSchema = try pr.getFileMetaData.getSchema finally pr.close()
-        val present = schema.fields.filter(f => fileSchema.containsField(f.name))
-        val idx = present.map(_.name).zipWithIndex.toMap
-        proj = schema.fields.map(f => idx.getOrElse(f.name, -1))
-        reader = new VectorizedParquetRecordReader(false, 4096)
-        if (present.isEmpty) {
-          // a file predating EVERY required column: read all columns
-          // just to drive the row count; the projection nulls everything
-          reader.initialize(path, null)
-        } else {
-          val names = new java.util.ArrayList[String]()
-          present.foreach(f => names.add(f.name): Unit)
-          reader.initialize(path, names)
-        }
-        true
-      }
-
-      override def next(): Boolean = {
-        while (true) {
-          if (reader == null && !openNext()) return false
-          if (reader.nextKeyValue()) {
-            val in = reader.getCurrentValue.asInstanceOf[InternalRow]
-            val out = new Array[Any](schema.fields.length)
-            var o = 0
-            while (o < proj.length) {
-              val i = proj(o)
-              out(o) =
-                if (i < 0 || in.isNullAt(i)) null
-                else in.get(i, schema.fields(o).dataType) match {
-                  // copy values aliasing the reused batch memory
-                  case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
-                  case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-                  case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-                  case r: InternalRow => r.copy()
-                  case other => other
-                }
-              o += 1
-            }
-            row = new GenericInternalRow(out)
-            return true
-          }
-          reader.close()
-          reader = null
-        }
-        false // unreachable
-      }
-
-      override def get(): InternalRow = row
-
-      override def close(): Unit = {
-        if (reader != null) { reader.close(); reader = null }
-      }
-    }
+  /** Spark's parquet reader with the conf keys its own `ParquetScan`
+    * sets before building the same factory. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    val sql = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    Seq(ParquetInputFormat.READ_SUPPORT_CLASS -> classOf[ParquetReadSupport].getName,
+      ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA -> readSchemaV.json,
+      ParquetWriteSupport.SPARK_ROW_SCHEMA -> readSchemaV.json,
+      SQLConf.SESSION_LOCAL_TIMEZONE.key -> sql.sessionLocalTimeZone,
+      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key -> sql.nestedSchemaPruningEnabled.toString,
+      SQLConf.CASE_SENSITIVE.key -> sql.caseSensitiveAnalysis.toString,
+      SQLConf.PARQUET_BINARY_AS_STRING.key -> sql.isParquetBinaryAsString.toString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP.key -> sql.isParquetINT96AsTimestamp.toString,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key ->
+        sql.parquetInferTimestampNTZEnabled.toString,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key -> sql.legacyParquetNanosAsLong.toString,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key ->
+        sql.parquetReaderRespectUnknownTypeAnnotation.toString,
+    ).foreach { case (k, v) => conf.set(k, v) }
+    ParquetPartitionReaderFactory(sql,
+      spark.sparkContext.broadcast(new SerializableConfiguration(conf)),
+      tableSchema, readSchemaV, new StructType(), filters, None,
+      new ParquetOptions(Map.empty[String, String], sql))
   }
+}
+
+/** A partition-grouped task: Spark's file partition plus the tuple it
+  * reports as its storage-partitioned-join key. */
+private[sources] class KeyedFilePartition(index: Int, files: Array[PartitionedFile],
+    key: InternalRow) extends FilePartition(index, files) with HasPartitionKey {
+  override def partitionKey(): InternalRow = key
 }

@@ -187,4 +187,29 @@ class StoreSourceSpec extends SparkSuite {
       .contains("(4 files after pruning)"),
       "a filtered scan keeps its full pruned file list under LIMIT")
   }
+
+  test("the scan runs Spark's vectorized parquet reader; a pushed filter skips row groups inside a kept file") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val t = freshTable()
+    // one key-sorted file cut into several row groups: a 4 KB parquet
+    // block holds a few hundred (k, v) rows of the 20k
+    val saved = spark.conf.getOption("parquet.block.size")
+    spark.conf.set("parquet.block.size", "4096")
+    try VersionedLoad.bootstrap(spark, t,
+      (1L to 20000L).map(k => (k, s"v$k")).toDF("k", "v")
+        .repartition(1).sortWithinPartitions("k"), asOfMicros = 1000L)
+    finally saved.fold(spark.conf.unset("parquet.block.size"))(
+      spark.conf.set("parquet.block.size", _))
+    assert(SnapshotStore.currentFiles(spark, t).size == 1)
+    val q = spark.read.format(Fmt).load(t).filter(col("k") <= 100L).select("v")
+    assert(q.collect().map(_.getString(0)).toSet == (1 to 100).map(k => s"v$k").toSet)
+    val scans = q.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+    assert(scans.size == 1, q.queryExecution.executedPlan.toString)
+    assert(scans.head.supportsColumnar,
+      "the store scan must hand columnar batches to the operator")
+    val read = scans.head.metrics("numOutputRows").value
+    assert(read >= 100L && read < 20000L,
+      s"parquet must skip the row groups k <= 100 rules out; the scan output $read of 20000 rows")
+  }
 }
