@@ -40,6 +40,7 @@ object LibraryReports {
       .join(broadcast(dimM.select("member_key")), Seq("member_key"))
       .groupBy(col("cal_year"), col("cal_quarter"), col("genre"))
       .agg(sum(col("total_amount")).as("rev"))
+      .transform(oneStageTail)
 
     def q(n: Int) = sum(when(col("cal_quarter") === n, col("rev")).otherwise(lit(0))).cast("double")
     val pivoted = base.groupBy("cal_year", "genre").agg(
@@ -79,11 +80,15 @@ object LibraryReports {
     val attributed = primary
       .groupBy("cal_year", "cal_quarter", "genre")
       .agg(count(lit(1)).as("n_pos"), sum(col("po_spend")).as("spend_dec"))
+      .transform(oneStageTail)
 
+    // densification over the quarter × genre universe. `attributed` is
+    // broadcast into the left join: a sort-merge join over two
+    // single-partition sides would re-shuffle both.
     val quarters = attributed.select("cal_year", "cal_quarter").distinct()
     val genres   = attributed.select("genre").distinct()
     val dense = quarters.crossJoin(broadcast(genres))
-      .join(attributed, Seq("cal_year", "cal_quarter", "genre"), "left_outer")
+      .join(broadcast(attributed), Seq("cal_year", "cal_quarter", "genre"), "left_outer")
       .select(
         col("cal_year"), col("cal_quarter"), col("genre"),
         coalesce(col("n_pos"), lit(0L)).cast("long").as("n_pos"),
@@ -126,6 +131,7 @@ object LibraryReports {
         // at the report edge.
         sum(col("sales_price") * lit("0.8").cast("decimal(2,1)") * col("quantity"))
           .as("cost_dec"))
+      .transform(oneStageTail)
 
     val wQoQ = Window.partitionBy(col("member_state")).orderBy(col("cal_year"), col("cal_quarter"))
     base
@@ -151,8 +157,9 @@ object LibraryReports {
     * (ref 08_InsertFines.sql's inspection queries, generalized): per
     * (year, fine type) billed vs collected amounts, collection rate, and
     * the average days from fine to payment for collected fines. One
-    * shuffle on the (year, type) grain; payments join is payment-id keyed
-    * with the (small) payment side broadcast by stats. */
+    * shuffle, into the (year, type) grain; the sort after it runs in that
+    * stage ([[oneStageTail]]). The payments join is payment-id keyed with
+    * the (small) payment side broadcast by stats. */
   def q4FineRevenue(fines: DataFrame, payments: DataFrame, p: Params = Params()): DataFrame = {
     val paid = payments.select(col("payment_id"), col("payment_date"))
     fines
@@ -168,6 +175,7 @@ object LibraryReports {
           / count(lit(1))).as("collection_rate"),
         avg(when(col("payment_date").isNotNull,
           datediff(col("payment_date"), col("fine_date")))).as("avg_days_to_pay"))
+      .transform(oneStageTail)
       .orderBy(col("cal_year"), col("fine_type"))
   }
 
@@ -175,7 +183,8 @@ object LibraryReports {
     * absence and late rates (trg_auto_mark_late statuses), and worked
     * hours with the reference's truncated-hour arithmetic. Attendance ⋈
     * schedule is keyed on schedule_id; staff/shift lookups broadcast
-    * (bounded dims). One shuffle on the (role, year) grain. */
+    * (bounded dims). One shuffle, into the (role, year) grain; the sort
+    * after it runs in that stage ([[oneStageTail]]). */
   def q5StaffUtilization(staff: DataFrame, schedules: DataFrame, attendance: DataFrame): DataFrame =
     attendance
       .join(schedules.select("schedule_id", "staff_id", "shift_date"), Seq("schedule_id"))
@@ -190,5 +199,6 @@ object LibraryReports {
         sum(when(col("actual_end_time").isNotNull,
           (unix_micros(col("actual_end_time")) - unix_micros(col("actual_start_time"))) / lit(3600000000L))
           .otherwise(lit(0L)).cast("long")).as("worked_hours"))
+      .transform(oneStageTail)
       .orderBy(col("staff_role"), col("cal_year"))
 }

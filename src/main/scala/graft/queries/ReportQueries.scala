@@ -41,6 +41,7 @@ object ReportQueries {
         quarter(col("o_orderdate")).cast("long").as("qtr"),
         col("p_brand").as("genre"))
       .agg(sum(Norm.dec(col("l_extendedprice")) * (lit(1) - col("l_discount").cast("decimal(4,2)"))).as("rev"))
+      .transform(oneStageTail)
 
     val pivoted = base
       .groupBy("yr", "genre")
@@ -127,26 +128,22 @@ object ReportQueries {
         sum(col("brand_spend")).as("order_spend"),
         min(struct((-col("brand_spend")).as("neg_spend"), col("p_brand"))).getField("p_brand").as("p_brand"))
 
-    // persisted: the frame is consumed THREE times (the quarter
-    // universe, the genre universe, and the densified join) and each
-    // use re-ran the full star join + two order-grain aggregations
-    // (visible as three copies of the subtree in the r18 plan audit).
-    // The grain is (yr, qtr, genre) — dims-bounded at any corpus size,
-    // so the persist is bytes, never data-proportional.
     val attributed = primary
       .groupBy(
         year(col("o_orderdate")).cast("long").as("yr"),
         quarter(col("o_orderdate")).cast("long").as("qtr"),
         col("p_brand").as("genre"))
       .agg(count(lit(1)).as("n_orders"), sum(col("order_spend")).as("spend_dec"))
-      .persist()
+      .transform(oneStageTail)
 
-    // densification: full (yr, qtr) × genre universe, zero-filled
+    // densification: full (yr, qtr) × genre universe, zero-filled.
+    // `attributed` is broadcast into the left join: a sort-merge join
+    // over two single-partition sides would re-shuffle both.
     val quarters = attributed.select("yr", "qtr").distinct()
     val genres   = attributed.select("genre").distinct()
     val dense = quarters
       .crossJoin(broadcast(genres))
-      .join(attributed, Seq("yr", "qtr", "genre"), "left_outer")
+      .join(broadcast(attributed), Seq("yr", "qtr", "genre"), "left_outer")
       .select(
         col("yr"), col("qtr"), col("genre"),
         coalesce(col("n_orders"), lit(0L)).cast("long").as("n_orders"),
@@ -234,6 +231,7 @@ object ReportQueries {
       .agg(
         sum(Norm.dec(col("l_extendedprice")) * (lit(1) - col("l_discount").cast("decimal(4,2)"))).as("rev_dec"),
         sum(Norm.dec(col("p_retailprice")) * lit("0.8").cast("decimal(2,1)") * Norm.dec(col("l_quantity"))).as("cost_dec"))
+      .transform(oneStageTail)
 
     val wQoQ = Window.partitionBy(col("state")).orderBy(col("yr"), col("qtr"))
     base
@@ -390,8 +388,7 @@ object ReportQueries {
     // they sit in independent plan branches that AQE materializes
     // CONCURRENTLY — re-deriving it is ~1 scan of wall time, while a
     // persist serializes the whole fan-out behind one materialization
-    // (measured +0.3-0.5 s on this op; contrast q2's attributed frame,
-    // whose duplicated subtree is a multi-stage chain and does win)
+    // (measured +0.3-0.5 s on this op)
     val base = cust.crossJoin(broadcast(anchor))
       .select(col("cust_key"),
         datediff(col("anchor"), col("last_order")).cast("long").as("recency_days"),
