@@ -9,11 +9,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * Bench session configuration and reports, per query, the warm cost
   * decomposition the disabled UI would otherwise show — jobs launched,
   * stages, tasks, summed executor task time, GC time, shuffle bytes
-  * read/written, and records shuffled. Methodology matches Bench (same
-  * session confs, warmup action, `.count()` as the measured action,
-  * cache/persistent-RDD cleanup between queries); numbers are from the
-  * SECOND run of each query so one-time artifact builds and codegen drop
-  * out.
+  * read/written, and records shuffled. Methodology: Bench's session
+  * confs and warmup action, `.count()` as the measured action, and the
+  * cache and persistent RDDs cleared before EVERY repeat, so no repeat
+  * is measured on a frame an earlier repeat persisted. One row per
+  * repeat (GRAFT_PROFILE_RUNS, default 2): the first carries one-time
+  * artifact builds and codegen, later ones run warm.
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.Profile <sfDir> key..."
   */
@@ -107,11 +108,9 @@ object Profile {
     val repeats = sys.env.getOrElse("GRAFT_PROFILE_RUNS", "2").toInt
     println(f"${"query"}%-34s ${"sec"}%7s ${"jobs"}%5s ${"stg"}%4s ${"task"}%5s ${"taskSec"}%8s ${"gcMs"}%6s ${"shRdMB"}%7s ${"shWrMB"}%7s ${"shRdRec"}%9s ${"inMB"}%7s ${"spillMB"}%7s ${"maxTask"}%7s")
     keys.foreach { name =>
-      var last = 0.0
-      // cleanup BETWEEN queries only (matching Bench): repeat 2+ runs with
-      // whatever intra-query caches repeat 1 populated, which is exactly
-      // the state Bench's min-of-N measures.
       (1 to repeats).foreach { i =>
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
         System.gc()
         acc.reset()
         val t0 = System.nanoTime()
@@ -119,18 +118,15 @@ object Profile {
         val tBuild = (System.nanoTime() - t0) / 1e9
         val buildJobs = acc.jobs.get
         df.count()
-        last = (System.nanoTime() - t0) / 1e9
-        if (i == repeats) System.err.println(f"[profile] $name%-34s build=$tBuild%.3f ($buildJobs jobs) action=${last - tBuild}%.3f")
+        val sec = (System.nanoTime() - t0) / 1e9
+        val label = s"$name#$i"
+        System.err.println(f"[profile] $label%-34s build=$tBuild%.3f ($buildJobs jobs) action=${sec - tBuild}%.3f")
         // let straggler listener events drain before reading the counters
         acc.quiesce()
-        if (i == repeats) {
-          println(f"$name%-34s $last%7.3f ${acc.jobs.get}%5d ${acc.stages.get}%4d ${acc.tasks.get}%5d ${acc.taskTimeMs.get / 1000.0}%8.2f ${acc.gcMs.get}%6d ${acc.shufReadB.get / 1e6}%7.1f ${acc.shufWriteB.get / 1e6}%7.1f ${acc.shufReadRec.get}%9d ${acc.inputB.get / 1e6}%7.1f ${acc.spillB.get / 1e6}%7.1f ${acc.maxTaskMs.get}%7d")
-          if (sys.env.contains("GRAFT_PROFILE_JOBS"))
-            acc.jobLog.forEach(l => System.err.println(s"[jobs] $name $l"))
-        }
+        println(f"$label%-34s $sec%7.3f ${acc.jobs.get}%5d ${acc.stages.get}%4d ${acc.tasks.get}%5d ${acc.taskTimeMs.get / 1000.0}%8.2f ${acc.gcMs.get}%6d ${acc.shufReadB.get / 1e6}%7.1f ${acc.shufWriteB.get / 1e6}%7.1f ${acc.shufReadRec.get}%9d ${acc.inputB.get / 1e6}%7.1f ${acc.spillB.get / 1e6}%7.1f ${acc.maxTaskMs.get}%7d")
+        if (sys.env.contains("GRAFT_PROFILE_JOBS"))
+          acc.jobLog.forEach(l => System.err.println(s"[jobs] $label $l"))
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }
     spark.stop()
   }

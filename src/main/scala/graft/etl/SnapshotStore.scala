@@ -633,6 +633,27 @@ object SnapshotStore {
       .flatMap { case (_, m) => manifestDataFiles(fs, tgt, m) }
   }
 
+  /** True when every path is a present data file of a completed snapshot
+    * directory: one named like a commit's `snapshot-<id>-<nonce>/` that
+    * carries its writing job's `_SUCCESS`. Such files are write-once
+    * (every commit writes a fresh directory, and nothing rewrites one:
+    * GC and vacuum only delete), so rows read from one stay that file's
+    * rows for as long as its path, length and mtime do. A deleted file is
+    * not one, so a read planned before GC or an erasure removed it still
+    * fails as the read-laziness contract says. Costs one existence check
+    * per file and per directory; opens no file. False for an empty list. */
+  private[graft] def areSnapshotFiles(conf: org.apache.hadoop.conf.Configuration, files: Seq[Path]): Boolean =
+    files.nonEmpty && files.forall { f =>
+      val n = f.getName
+      !n.startsWith("_") && !n.startsWith(".") && f.getParent != null &&
+        SnapshotDirName.matches(f.getParent.getName)
+    } && (files.map(_.getParent).distinct.map(new Path(_, "_SUCCESS")) ++ files).forall { p =>
+      p.getFileSystem(conf).exists(p)
+    }
+
+  /** A commit's snapshot directory name, as [[promote]] forms it. */
+  private val SnapshotDirName = s"$SnapshotPrefix\\d{20}-[0-9a-f]{8}".r
+
   /** Version `id`'s data files, table-root relative — the file-level
     * view [[VersionedLoad.restore]] and [[VersionedLoad.changesBetween]]
     * build on. None when the version is not committed/retained. */

@@ -113,5 +113,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => YearPredicateRewrite)
     ext.injectPlannerStrategy(_ => RangeLookupJoinStrategy)
+    ext.injectQueryStagePrepRule(_ => SnapshotBroadcast)
   }
 }

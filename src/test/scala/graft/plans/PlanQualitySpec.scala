@@ -3,7 +3,7 @@ package graft.plans
 import graft.SparkSuite
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 
 /** Plan-shape regression tests for the flagship reports and the scale-
   * sensitive ops: the rules that make these queries safe at 100 TB are
@@ -21,7 +21,7 @@ class PlanQualitySpec extends SparkSuite {
   /** BroadcastExchange subtrees that scan a fact table without any
     * aggregation in between — the unbounded-broadcast anti-pattern. */
   private def corpusBroadcasts(p: SparkPlan): Seq[String] =
-    p.collect { case b: BroadcastExchangeExec => b }.flatMap { b =>
+    p.collect { case b: BroadcastExchangeLike => b }.flatMap { b =>
       val aggregated = b.exists {
         case _: HashAggregateExec | _: ObjectHashAggregateExec | _: SortAggregateExec => true
         case _ => false
@@ -331,7 +331,7 @@ class PlanQualitySpec extends SparkSuite {
         "eval_retrieval_recall_trained" -> "embeddings")) {
         val df = graft.SparkEntry.queries(q)(spark, sf001)
         val uncapped = df.queryExecution.executedPlan
-          .collect { case b: BroadcastExchangeExec => b }
+          .collect { case b: BroadcastExchangeLike => b }
           .filter { b =>
             val scansEmbeddings = b.exists {
               case s: FileSourceScanExec =>
