@@ -12,69 +12,16 @@ import org.apache.spark.sql.expressions.Window
   */
 object EtlOps {
 
-  /** dir → the fully-built (both versions promoted) time-travel table of
-    * etl_snapshot_timetravel; entries exist only for COMPLETED builds. */
-  private val timetravelTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** (kind, dir) → the store table (or `a|b`-encoded pair of tables) of
+    * the fixture an op kind builds over a corpus dir. Ops that share a
+    * fixture share its kind. An entry exists only for a COMPLETED build:
+    * `computeIfAbsent` stores nothing when the build throws, so the next
+    * call builds again. Builds must not nest: a `computeIfAbsent` inside
+    * another on the same map throws. */
+  private val fixtures = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  /** dir → the fully-built (bootstrap + refresh committed) versioned
-    * incremental-load table of etl_incremental_versioned. */
-  private val incrVersionedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (fragmented bootstrap + compaction committed)
-    * table of etl_snapshot_compact. */
-  private val compactTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (bootstrap + copy-on-write merge committed)
-    * table of etl_merge_versioned. */
-  private val mergeVersionedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (bootstrap + refresh + restore committed)
-    * table of etl_snapshot_restore. */
-  private val restoreTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (bootstrap + two refreshes) table of
-    * etl_table_changes. */
-  private val changesTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (bootstrap + I/U/D applyCdc committed) table
-    * shared by etl_merge_delete and etl_cdc_delete_events. */
-  private val mergeDeleteTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the key-clustered, typed-stats bootstrap of
-    * etl_keyrange_scan. */
-  private val keyrangeTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (bootstrap + dedup-delete committed)
-    * versioned corpus of dedup_purge_versioned. */
-  private val purgeTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (fragmented bootstrap + z-ordered compact)
-    * table of etl_compact_zorder. */
-  private val zorderTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (year-partitioned bootstrap + refresh)
-    * table of etl_partition_spec. */
-  private val partSpecTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (three-commit) table of etl_store_history. */
-  private val historyTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the fully-built (two-dimension-partitioned bootstrap) table
-    * shared by etl_partition_spec_multi and etl_store_dsv2_scan. */
-  private val multiSpecTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[ops] def builtOnce(kind: String, dir: String)(build: => String): String =
+    fixtures.computeIfAbsent((kind, dir), _ => build)
 
   /** The (year(od), div200000(o_orderkey)) two-dimension orders table —
     * ONE builder (either sharing op may arrive first; a drifting copy
@@ -86,7 +33,7 @@ object EtlOps {
     val specs = Seq(
       graft.etl.SnapshotStore.PartitionSpec("year", "od"),
       graft.etl.SnapshotStore.PartitionSpec("div200000", "o_orderkey"))
-    multiSpecTables.computeIfAbsent(dir, _ => {
+    builtOnce("multiSpec", dir) {
       val t = freshStoreTable(dir, "multispec_tbl_")
       // range-cluster by BOTH transform values (clusterBySpecs — the
       // ONE transform definition shapes the layout too): most files
@@ -98,20 +45,15 @@ object EtlOps {
         asOfMicros = 900000000000000L,
         statsCol = Some("o_orderkey"), partitionSpecs = specs)
       t
-    })
+    }
   }
-
-  /** dir → the fully-statted orders table of etl_store_agg_pushdown
-    * (row/null counts + long and date min/max on every file). */
-  private val aggPushTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The orders table statted for metadata-only aggregates: every file
     * carries `r` (rows), `n` (nulls: maybe_key), `s` (o_orderkey) and
     * `t date` (od) lines, so COUNT/MIN/MAX answer from the manifest. */
   private def aggPushTable(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    aggPushTables.computeIfAbsent(dir, _ => {
+    builtOnce("aggPush", dir) {
       val t = freshStoreTable(dir, "aggpush_tbl_")
       val o = Tables(spark, dir).orders.select(
         col("o_orderkey"),
@@ -122,12 +64,7 @@ object EtlOps {
         asOfMicros = 900000000000000L,
         statsCol = Some("o_orderkey"), statsCols = Seq("od", "maybe_key"))
       t
-    })
-
-  /** dir → the bootstrap+DSv2-appended orders table of
-    * etl_store_dsv2_write. */
-  private val dsv2WriteTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Built THROUGH the DSv2 write path: v0 bootstraps the low half of
     * orders, v1 lands the high half via
@@ -135,7 +72,7 @@ object EtlOps {
     * v0's files and stat its own. */
   private def dsv2WriteTable(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    dsv2WriteTables.computeIfAbsent(dir, _ => {
+    builtOnce("dsv2Write", dir) {
       val t = freshStoreTable(dir, "dsv2write_tbl_")
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"),
@@ -149,17 +86,7 @@ object EtlOps {
         .option("asOfMicros", "900000001000000")
         .mode("append").save(t)
       t
-    })
-
-  /** dir → the two co-bucketed store tables of etl_bucket_join,
-    * encoded "custTable|ordTable". */
-  private val bucketJoinTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** dir → the two identity-co-partitioned store tables of
-    * etl_store_spj_join, encoded "aTable|bTable". */
-  private val spjTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Sweep abandoned UUID-named store tables with `prefix` under the
     * corpus's scratch root, then return a fresh table path. The sweep
@@ -312,7 +239,7 @@ object EtlOps {
       // The memo makes repeat invocations (bench best-of-N) read-only:
       // it is set only AFTER both promotes succeed, so a failed build
       // throws without memoizing and the next invocation rebuilds clean.
-      val table = EtlOps.timetravelTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("timetravel", dir) {
         val t = EtlOps.freshStoreTable(dir, "timetravel_dim_")
         val v0 = Scd2.initial(c.select("c_custkey", "c_name", "c_mktsegment"), "1992-01-01")
         val id0 = graft.etl.SnapshotStore.promote(spark, t, v0,
@@ -326,7 +253,7 @@ object EtlOps {
         graft.etl.SnapshotStore.promote(spark, t, v1,
           preferredId = 1L, keep = 16, asOfMicros = Some(asOf1))
         t
-      })
+      }
       // leg 3: timestamp travel to 1994-01-01 — strictly between the two
       // commits' pinned instants, so it MUST resolve the v0 state
       val asOfQuery = 757382400000000L // 1994-01-01T00:00:00Z
@@ -511,7 +438,7 @@ object EtlOps {
       // memoized build (the etl_snapshot_timetravel discipline: fresh
       // UUID table per build, abandoned siblings swept, memo set only
       // after both commits succeed so bench repeats are read-only)
-      val table = EtlOps.incrVersionedTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("incrVersioned", dir) {
         val t = EtlOps.freshStoreTable(dir, "incr_versioned_")
         val existing = o.filter(col("od") < lit("1996-01-01").cast("date"))
         graft.etl.VersionedLoad.bootstrap(spark, t, existing,
@@ -521,7 +448,7 @@ object EtlOps {
         graft.etl.VersionedLoad.refresh(spark, t, batch, Seq("o_orderkey"),
           asOfMicros = 852076800000000L) // 1997-01-01T00:00:00Z, post-refresh horizon
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, ver: Long) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -578,7 +505,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.mergeVersionedTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("mergeVersioned", dir) {
         val t = EtlOps.freshStoreTable(dir, "merge_versioned_")
         val existing = o.filter(col("od") < lit("1996-01-01").cast("date"))
         // statsCol: the checked path exercises the per-file min/max
@@ -596,7 +523,7 @@ object EtlOps {
           asOfMicros = Some(852076800000000L), // 1997-01-01T00:00:00Z
           statsCol = Some("o_orderkey"))
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, ver: Long) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -635,7 +562,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.mergeVersionedTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("mergeVersioned", dir) {
         val t = EtlOps.freshStoreTable(dir, "merge_versioned_")
         val existing = o.filter(col("od") < lit("1996-01-01").cast("date"))
         graft.etl.VersionedLoad.bootstrap(spark, t, existing,
@@ -647,7 +574,7 @@ object EtlOps {
         graft.etl.VersionedLoad.merge(spark, t, batch, Seq("o_orderkey"),
           asOfMicros = Some(852076800000000L), statsCol = Some("o_orderkey"))
         t
-      })
+      }
       graft.etl.VersionedLoad.upsertsBetween(spark, table, 0L, 1L, Some("o_orderkey")).get
         .groupBy(year(col("od")).cast("long").as("yr"))
         .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -685,7 +612,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.compactTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("compact", dir) {
         val t = EtlOps.freshStoreTable(dir, "compact_tbl_")
         val asOf = 852076800000000L // 1997-01-01T00:00:00Z, the load horizon
         graft.etl.VersionedLoad.bootstrap(spark, t, o.repartition(16), asOfMicros = asOf,
@@ -697,7 +624,7 @@ object EtlOps {
         graft.etl.VersionedLoad.compact(spark, t, numFiles = 2, asOfMicros = Some(asOf),
           statsCol = Some("o_orderkey"), sortBy = Some("o_orderkey"))
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, ver: Long) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -748,7 +675,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.restoreTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("restore", dir) {
         val t = EtlOps.freshStoreTable(dir, "restore_tbl_")
         graft.etl.VersionedLoad.bootstrap(spark, t,
           o.filter(col("od") < lit("1995-01-01").cast("date")),
@@ -760,7 +687,7 @@ object EtlOps {
         graft.etl.VersionedLoad.restore(spark, t, version = 0L,
           asOfMicros = Some(852076800000000L)) // 1997-01-01T00:00:00Z, the rollback instant
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, ver: Long) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -811,7 +738,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.changesTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("changes", dir) {
         val t = EtlOps.freshStoreTable(dir, "changes_tbl_")
         graft.etl.VersionedLoad.bootstrap(spark, t,
           o.filter(col("od") < lit("1995-01-01").cast("date")),
@@ -825,7 +752,7 @@ object EtlOps {
             lit("1995-07-01").cast("date"), lit("1996-12-31").cast("date"))),
           Seq("o_orderkey"), asOfMicros = 852076800000000L) // 1997-01-01T00:00:00Z
         t
-      })
+      }
       graft.etl.VersionedLoad.changesBetween(spark, table, 1L, 2L).get
         .groupBy(year(col("od")).cast("long").as("yr"))
         .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -882,7 +809,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.mergeDeleteTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("mergeDelete", dir) {
         val t = EtlOps.freshStoreTable(dir, "merge_delete_")
         graft.etl.VersionedLoad.bootstrap(spark, t,
           o.filter(col("od") < lit("1996-01-01").cast("date")),
@@ -904,7 +831,7 @@ object EtlOps {
           asOfMicros = Some(852076800000000L), // 1997-01-01T00:00:00Z
           statsCol = Some("o_orderkey"))
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, leg: String) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -956,7 +883,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.mergeDeleteTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("mergeDelete", dir) {
         val t = EtlOps.freshStoreTable(dir, "merge_delete_")
         graft.etl.VersionedLoad.bootstrap(spark, t,
           o.filter(col("od") < lit("1996-01-01").cast("date")),
@@ -973,7 +900,7 @@ object EtlOps {
           Seq("o_orderkey"), "_op",
           asOfMicros = Some(852076800000000L), statsCol = Some("o_orderkey"))
         t
-      })
+      }
       graft.etl.VersionedLoad.cdcBetween(spark, table, 0L, 1L,
           Seq("o_orderkey"), Some("o_orderkey")).get
         .groupBy(col("_change_type").as("change_type"),
@@ -1017,14 +944,14 @@ object EtlOps {
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"),
           col("o_orderpriority"), col("o_totalprice"))
-      val table = EtlOps.keyrangeTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("keyrange", dir) {
         val t = EtlOps.freshStoreTable(dir, "keyrange_tbl_")
         graft.etl.VersionedLoad.bootstrap(spark, t,
           o.repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey"),
           asOfMicros = 852076800000000L,
           statsCol = Some("o_orderkey"), statsCols = Seq("od", "o_orderpriority"))
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, leg: String) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -1070,7 +997,7 @@ object EtlOps {
     ) { (spark, dir) =>
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
-      val table = EtlOps.zorderTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("zorder", dir) {
         val t = EtlOps.freshStoreTable(dir, "zorder_tbl_")
         graft.etl.VersionedLoad.bootstrap(spark, t, o.repartition(8),
           asOfMicros = 852076800000000L,
@@ -1080,7 +1007,7 @@ object EtlOps {
           statsCol = Some("o_orderkey"), statsCols = Seq("od"),
           zorderBy = Seq("o_orderkey", "od"))
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, leg: String) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -1137,7 +1064,7 @@ object EtlOps {
       // every testdata scale, where full-content dups only exist at 0.1)
       val docs = Tables(spark, dir).documents
         .select(col("doc_id"), md5(substring(col("text"), 1, 80)).as("fp"), col("source"))
-      val table = EtlOps.purgeTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("purge", dir) {
         val t = EtlOps.freshStoreTable(dir, "purge_tbl_")
         graft.etl.VersionedLoad.bootstrap(spark, t, docs,
           asOfMicros = 1700000000000000L, statsCol = Some("doc_id"))
@@ -1147,7 +1074,7 @@ object EtlOps {
         graft.etl.VersionedLoad.delete(spark, t, dels, Seq("doc_id"),
           asOfMicros = Some(1700000100000000L), statsCol = Some("doc_id"))
         t
-      })
+      }
       def srcAgg(df: org.apache.spark.sql.DataFrame, leg: String) =
         df.groupBy("source")
           .agg(count(lit(1)).as("n_docs"), countDistinct(col("fp")).as("n_fps"))
@@ -1200,7 +1127,7 @@ object EtlOps {
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"), col("o_totalprice"))
       val spec = graft.etl.SnapshotStore.PartitionSpec("year", "od")
-      val table = EtlOps.partSpecTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("partSpec", dir) {
         val t = EtlOps.freshStoreTable(dir, "partspec_tbl_")
         // repartition BY the partition value: each written file holds
         // exactly one year, so every file gets its `v` line (a
@@ -1218,7 +1145,7 @@ object EtlOps {
             .repartitionByRange(8, year(col("od"))),
           Seq("o_orderkey"), asOfMicros = 852076800000000L) // 1997-01-01T00:00:00Z
         t
-      })
+      }
       def yearAgg(df: org.apache.spark.sql.DataFrame, leg: String) =
         df.groupBy(year(col("od")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"), Norm.dsum(col("o_totalprice")).as("spend"))
@@ -1314,7 +1241,7 @@ object EtlOps {
       val n = 8
       val t = Tables(spark, dir)
       val s = graft.etl.SnapshotStore
-      val both = EtlOps.bucketJoinTables.computeIfAbsent(dir, _ => {
+      val both = builtOnce("bucketJoin", dir) {
         val ct = EtlOps.freshStoreTable(dir, "bucket_cust_")
         val ot = EtlOps.freshStoreTable(dir, "bucket_ord_")
         def load(tbl: String, df: org.apache.spark.sql.DataFrame, key: String): Unit = {
@@ -1326,7 +1253,7 @@ object EtlOps {
         load(ct, t.customer.select("c_custkey", "c_mktsegment"), "c_custkey")
         load(ot, t.orders.select("o_custkey", "o_totalprice"), "o_custkey")
         s"$ct|$ot"
-      })
+      }
       val Array(ct, ot) = both.split('|')
       (0 until n).map { b =>
         val cb = s.readPartitionRange(spark, ct, b.toLong, b.toLong).get
@@ -1410,7 +1337,7 @@ object EtlOps {
       val t = Tables(spark, dir)
       val s = graft.etl.SnapshotStore
       val spec = s.PartitionSpec("identity", "g")
-      val both = EtlOps.spjTables.computeIfAbsent(dir, _ => {
+      val both = builtOnce("spj", dir) {
         val at = EtlOps.freshStoreTable(dir, "spj_orders_")
         val bt = EtlOps.freshStoreTable(dir, "spj_cust_")
         val a = t.orders.groupBy((col("o_custkey") % 50).cast("long").as("g"))
@@ -1424,7 +1351,7 @@ object EtlOps {
           s.clusterBySpecs(b, Seq(spec), 50), asOfMicros = 900000000000000L,
           partitionSpec = Some(spec))
         s"$at|$bt"
-      })
+      }
       val Array(at, bt) = both.split('|')
       def side(tbl: String) = spark.read.format("graft.sources.StoreSource")
         .option("partitionGrouped", "true").load(tbl)
@@ -1527,7 +1454,7 @@ object EtlOps {
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey"), col("o_totalprice"))
       def slice(r: Int) = o.filter(col("o_orderkey") % 3 === r).repartition(1)
-      val table = EtlOps.historyTables.computeIfAbsent(dir, _ => {
+      val table = builtOnce("history", dir) {
         val t = EtlOps.freshStoreTable(dir, "history_tbl_")
         val s = graft.etl.SnapshotStore
         s.promote(spark, t, slice(0), preferredId = 0L, keep = 16,
@@ -1539,7 +1466,7 @@ object EtlOps {
           asOfMicros = Some(1000002000000000L),
           reuseFiles = s.currentFiles(spark, t)): Unit
         t
-      })
+      }
       import spark.implicits._
       graft.etl.SnapshotStore.history(spark, table)
         .map(h => (h.version, h.asOfMicros.getOrElse(-1L), h.numFiles.toLong))

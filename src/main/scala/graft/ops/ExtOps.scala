@@ -30,11 +30,6 @@ object ExtOps {
     * JVM exits (the [[PipelineOps.BpeDictDir]] pattern). */
   val ZonemapDir = graft.Artifacts.Root + s"/zonemapdata_c$ZonemapCuts"
 
-  /** dir → io_bucketed_join's corpus tag (dir hash + row counts),
-    * computed once per process so the cache-hit path is job-free. */
-  private val bucketedTags =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val ops: Seq[OpQuery] = Seq(
     // ── join_asof: for every click, the latest view of the same user at
     // or before it (the reference's closest analog is the range joins of
@@ -360,8 +355,9 @@ object ExtOps {
       // also sweeps SUPERSEDED tags for this dir, or regenerations
       // would leak one abandoned table pair per rebuild.
       val dirTag = java.lang.Integer.toHexString(dir.hashCode)
-      val tag = ExtOps.bucketedTags.computeIfAbsent(dir,
-        _ => s"${dirTag}_${t.orders.count()}_${t.lineitem.count()}")
+      // computed once per process, so the cache-hit path is job-free
+      val tag = EtlOps.builtOnce("bucketedTag", dir)(
+        s"${dirTag}_${t.orders.count()}_${t.lineitem.count()}")
       val ot = s"graft_orders_bucketed_$tag"
       val lt = s"graft_lineitem_bucketed_$tag"
       if (!spark.catalog.tableExists(ot) || !spark.catalog.tableExists(lt)) {

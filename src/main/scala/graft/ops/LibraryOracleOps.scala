@@ -114,6 +114,60 @@ object LibraryOracleOps {
     }
   }
 
+  /** The reference's Q1 report (quarter pivot, YoY LAG, top-5 genres
+    * per year) over the persisted DW parquet, on the fact rows that
+    * `factFilter` keeps. */
+  private def libQ1Sql(factFilter: String): String =
+    s"""WITH fs AS (SELECT * FROM read_parquet('$DataDir/dw_fact_sales.parquet/*.parquet')
+       |            WHERE $factFilter),
+       |dd AS (SELECT date_key, cal_year, cal_quarter
+       |       FROM read_parquet('$DataDir/dw_dim_date.parquet/*.parquet')),
+       |db AS (SELECT book_key, genre
+       |       FROM read_parquet('$DataDir/dw_dim_book.parquet/*.parquet')),
+       |dm AS (SELECT member_key
+       |       FROM read_parquet('$DataDir/dw_dim_members.parquet/*.parquet')),
+       |base AS (
+       |  SELECT dd.cal_year, dd.cal_quarter, db.genre, sum(fs.total_amount) AS rev
+       |  FROM fs JOIN dd USING (date_key) JOIN db USING (book_key) JOIN dm USING (member_key)
+       |  GROUP BY 1, 2, 3),
+       |piv AS (
+       |  SELECT cal_year, genre,
+       |         CAST(sum(CASE WHEN cal_quarter = 1 THEN rev ELSE 0 END) AS DOUBLE) AS q1_rev,
+       |         CAST(sum(CASE WHEN cal_quarter = 2 THEN rev ELSE 0 END) AS DOUBLE) AS q2_rev,
+       |         CAST(sum(CASE WHEN cal_quarter = 3 THEN rev ELSE 0 END) AS DOUBLE) AS q3_rev,
+       |         CAST(sum(CASE WHEN cal_quarter = 4 THEN rev ELSE 0 END) AS DOUBLE) AS q4_rev,
+       |         sum(rev) AS tot_dec
+       |  FROM base GROUP BY 1, 2),
+       |r AS (
+       |  SELECT *,
+       |         lag(tot_dec) OVER (PARTITION BY genre ORDER BY cal_year) AS prev_tot,
+       |         CAST(ROW_NUMBER() OVER (PARTITION BY cal_year
+       |                ORDER BY tot_dec DESC, genre ASC) AS BIGINT) AS rn
+       |  FROM piv)
+       |SELECT cal_year, genre, q1_rev, q2_rev, q3_rev, q4_rev,
+       |       CAST(tot_dec AS DOUBLE) AS tot_rev,
+       |       CAST(tot_dec - prev_tot AS DOUBLE) * 100 / CAST(prev_tot AS DOUBLE) AS yoy_pct,
+       |       rn
+       |FROM r WHERE rn <= 5""".stripMargin
+
+  /** name → the store table holding that dimension of the persisted DW
+    * as one committed, one-file version — built once per session, read
+    * by lib_q1_versioned. */
+  private def storeDims(spark: SparkSession, dir: String): Map[String, String] = {
+    val c = forSession(spark)
+    val dw = persistedDw(spark)
+    synchronized {
+      Seq("dim_date" -> dw.dimDate, "dim_book" -> dw.dimBook, "dim_members" -> dw.dimMembers).map {
+        case (name, df) => name -> c.storeTables.getOrElseUpdate(s"store_$name", {
+          val t = EtlOps.freshStoreTable(dir, s"lib_store_${name}_")
+          graft.etl.VersionedLoad.bootstrap(spark, t, df.coalesce(1),
+            asOfMicros = 1704067200000000L) // 2024-01-01T00:00:00Z, the load horizon
+          t
+        })
+      }.toMap
+    }
+  }
+
   val ops: Seq[OpQuery] = Seq(
     // ── lib_q4_fine_revenue: fines→payments revenue/collection report
     // over the seed-42 generated library (fine typing, trigger-derived
@@ -186,37 +240,7 @@ object LibraryOracleOps {
     // parquet (generator → triggers → InitialLoad → report, end to end).
     OpQuery.checked(
       "lib_q1_genre_sales",
-      s"""WITH fs AS (SELECT * FROM read_parquet('$DataDir/dw_fact_sales.parquet/*.parquet')
-         |            WHERE date_key BETWEEN 20050101 AND 20241231),
-         |dd AS (SELECT date_key, cal_year, cal_quarter
-         |       FROM read_parquet('$DataDir/dw_dim_date.parquet/*.parquet')),
-         |db AS (SELECT book_key, genre
-         |       FROM read_parquet('$DataDir/dw_dim_book.parquet/*.parquet')),
-         |dm AS (SELECT member_key
-         |       FROM read_parquet('$DataDir/dw_dim_members.parquet/*.parquet')),
-         |base AS (
-         |  SELECT dd.cal_year, dd.cal_quarter, db.genre, sum(fs.total_amount) AS rev
-         |  FROM fs JOIN dd USING (date_key) JOIN db USING (book_key) JOIN dm USING (member_key)
-         |  GROUP BY 1, 2, 3),
-         |piv AS (
-         |  SELECT cal_year, genre,
-         |         CAST(sum(CASE WHEN cal_quarter = 1 THEN rev ELSE 0 END) AS DOUBLE) AS q1_rev,
-         |         CAST(sum(CASE WHEN cal_quarter = 2 THEN rev ELSE 0 END) AS DOUBLE) AS q2_rev,
-         |         CAST(sum(CASE WHEN cal_quarter = 3 THEN rev ELSE 0 END) AS DOUBLE) AS q3_rev,
-         |         CAST(sum(CASE WHEN cal_quarter = 4 THEN rev ELSE 0 END) AS DOUBLE) AS q4_rev,
-         |         sum(rev) AS tot_dec
-         |  FROM base GROUP BY 1, 2),
-         |r AS (
-         |  SELECT *,
-         |         lag(tot_dec) OVER (PARTITION BY genre ORDER BY cal_year) AS prev_tot,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY cal_year
-         |                ORDER BY tot_dec DESC, genre ASC) AS BIGINT) AS rn
-         |  FROM piv)
-         |SELECT cal_year, genre, q1_rev, q2_rev, q3_rev, q4_rev,
-         |       CAST(tot_dec AS DOUBLE) AS tot_rev,
-         |       CAST(tot_dec - prev_tot AS DOUBLE) * 100 / CAST(prev_tot AS DOUBLE) AS yoy_pct,
-         |       rn
-         |FROM r WHERE rn <= 5""".stripMargin
+      libQ1Sql("date_key BETWEEN 20050101 AND 20241231")
     ) { (spark, _) =>
       graft.queries.LibraryReports.q1GenreSales(persistedDw(spark))
     },
@@ -681,8 +705,10 @@ object LibraryOracleOps {
     // div10000-partitioned FactSales read via readPartitionRange with
     // the report's own `BETWEEN &p_year_from AND &p_year_to` window
     // (2006-2023 — both edge years 2005/2024 exist in the table, so
-    // the prune does real work), dims join broadcast exactly as the
-    // flat-parquet lib_q1_genre_sales. This is the production read
+    // the prune does real work), and the three dimensions are read
+    // from their own committed store versions ([[storeDims]]), so their
+    // broadcasts take the job-free snapshot path
+    // ([[graft.plans.SnapshotBroadcast]]). This is the production read
     // path a 100 TB deployment runs daily: year partitions outside the
     // window are never opened (LibraryStoreSpec pins never-opened with
     // the destroyed-file device on the same DAG shape), and the report
@@ -691,43 +717,14 @@ object LibraryOracleOps {
     // in the IO.
     OpQuery.checked(
       "lib_q1_versioned",
-      s"""WITH fs AS (SELECT * FROM read_parquet('$DataDir/dw_fact_sales.parquet/*.parquet')
-         |            WHERE date_key // 10000 BETWEEN 2006 AND 2023),
-         |dd AS (SELECT date_key, cal_year, cal_quarter
-         |       FROM read_parquet('$DataDir/dw_dim_date.parquet/*.parquet')),
-         |db AS (SELECT book_key, genre
-         |       FROM read_parquet('$DataDir/dw_dim_book.parquet/*.parquet')),
-         |dm AS (SELECT member_key
-         |       FROM read_parquet('$DataDir/dw_dim_members.parquet/*.parquet')),
-         |base AS (
-         |  SELECT dd.cal_year, dd.cal_quarter, db.genre, sum(fs.total_amount) AS rev
-         |  FROM fs JOIN dd USING (date_key) JOIN db USING (book_key) JOIN dm USING (member_key)
-         |  GROUP BY 1, 2, 3),
-         |piv AS (
-         |  SELECT cal_year, genre,
-         |         CAST(sum(CASE WHEN cal_quarter = 1 THEN rev ELSE 0 END) AS DOUBLE) AS q1_rev,
-         |         CAST(sum(CASE WHEN cal_quarter = 2 THEN rev ELSE 0 END) AS DOUBLE) AS q2_rev,
-         |         CAST(sum(CASE WHEN cal_quarter = 3 THEN rev ELSE 0 END) AS DOUBLE) AS q3_rev,
-         |         CAST(sum(CASE WHEN cal_quarter = 4 THEN rev ELSE 0 END) AS DOUBLE) AS q4_rev,
-         |         sum(rev) AS tot_dec
-         |  FROM base GROUP BY 1, 2),
-         |r AS (
-         |  SELECT *,
-         |         lag(tot_dec) OVER (PARTITION BY genre ORDER BY cal_year) AS prev_tot,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY cal_year
-         |                ORDER BY tot_dec DESC, genre ASC) AS BIGINT) AS rn
-         |  FROM piv)
-         |SELECT cal_year, genre, q1_rev, q2_rev, q3_rev, q4_rev,
-         |       CAST(tot_dec AS DOUBLE) AS tot_rev,
-         |       CAST(tot_dec - prev_tot AS DOUBLE) * 100 / CAST(prev_tot AS DOUBLE) AS yoy_pct,
-         |       rn
-         |FROM r WHERE rn <= 5""".stripMargin
+      libQ1Sql("date_key // 10000 BETWEEN 2006 AND 2023")
     ) { (spark, dir) =>
       val table = factPartitionedTable(spark, dir)
-      val prunedFact = graft.etl.SnapshotStore
-        .readPartitionRange(spark, table, 2006L, 2023L).get
+      val store = graft.etl.SnapshotStore
+      val dims = storeDims(spark, dir).map { case (n, t) => n -> store.read(spark, t).get }
       graft.queries.LibraryReports.q1GenreSales(
-        persistedDw(spark).copy(factSales = prunedFact),
+        persistedDw(spark).copy(factSales = store.readPartitionRange(spark, table, 2006L, 2023L).get,
+          dimDate = dims("dim_date"), dimBook = dims("dim_book"), dimMembers = dims("dim_members")),
         graft.queries.LibraryReports.Params(yearFrom = 2006, yearTo = 2023))
     },
 

@@ -3,7 +3,6 @@ package graft.queries
 import graft.etl.DwTables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** The reference's three OLAP reports over the REAL library star schema
   * (graft.etl.InitialLoad output) — the domain-faithful counterparts of
@@ -16,6 +15,9 @@ import org.apache.spark.sql.expressions.Window
   * Q3 (LQY_query3.txt:62-135): quarterly gross margin by member state —
   *    cost = 0.8 × sales price (the reference's purchase-price model),
   *    QoQ deltas with threshold signals.
+  *
+  * Q1–Q3 are star adapters: the joins, filters and first aggregate of
+  * this star, then the tail shared with ReportQueries ([[ReportTails]]).
   */
 object LibraryReports {
 
@@ -27,96 +29,42 @@ object LibraryReports {
       states: Option[Seq[String]] = None, // Q3: state list / None = ALL
       alertPct: Double = 10.0)
 
+  private def grain(key: String) = Grain("cal_year", "cal_quarter", key)
+
+  /** The fact rows of the year window. date_key is yyyymmdd, so the
+    * window is a pushable key-range scan predicate on the fact
+    * (partition-prunes a date_key-partitioned fact); the dimDate join
+    * only decorates with calendar attributes. */
+  private def window(fact: DataFrame, dw: DwTables, p: Params): DataFrame =
+    fact.filter(col("date_key").between(p.yearFrom * 10000L + 101, p.yearTo * 10000L + 1231))
+      .join(broadcast(dw.dimDate.select("date_key", "cal_year", "cal_quarter")), Seq("date_key"))
+
   /** Q1 — genre-quarter sales with pivot, YoY and rank. */
   def q1GenreSales(dw: DwTables, p: Params = Params()): DataFrame = {
     val dimM = p.gender.fold(dw.dimMembers)(g => dw.dimMembers.filter(upper(col("member_gender")) === g.toUpperCase))
-    // date_key is yyyymmdd, so the year range is a pushable key-range scan
-    // predicate on the fact (partition-prunes a date_key-partitioned fact);
-    // the dimDate join only decorates with calendar attributes.
-    val base = dw.factSales
-      .filter(col("date_key").between(p.yearFrom * 10000L + 101, p.yearTo * 10000L + 1231))
-      .join(broadcast(dw.dimDate.select("date_key", "cal_year", "cal_quarter")), Seq("date_key"))
+    val base = window(dw.factSales, dw, p)
       .join(broadcast(dw.dimBook.select("book_key", "genre")), Seq("book_key"))
       .join(broadcast(dimM.select("member_key")), Seq("member_key"))
       .groupBy(col("cal_year"), col("cal_quarter"), col("genre"))
       .agg(sum(col("total_amount")).as("rev"))
-      .transform(oneStageTail)
-
-    def q(n: Int) = sum(when(col("cal_quarter") === n, col("rev")).otherwise(lit(0))).cast("double")
-    val pivoted = base.groupBy("cal_year", "genre").agg(
-      q(1).as("q1_rev"), q(2).as("q2_rev"), q(3).as("q3_rev"), q(4).as("q4_rev"),
-      sum(col("rev")).as("tot_dec"))
-
-    val wYoY  = Window.partitionBy(col("genre")).orderBy(col("cal_year"))
-    val wRank = Window.partitionBy(col("cal_year")).orderBy(col("tot_dec").desc, col("genre").asc)
-    pivoted
-      .withColumn("prev_tot", lag(col("tot_dec"), 1).over(wYoY))
-      .withColumn("rn", row_number().over(wRank).cast("long"))
-      .filter(col("rn") <= p.topN)
-      .select(
-        col("cal_year"), col("genre"),
-        col("q1_rev"), col("q2_rev"), col("q3_rev"), col("q4_rev"),
-        col("tot_dec").cast("double").as("tot_rev"),
-        ((col("tot_dec") - col("prev_tot")).cast("double") * 100 / col("prev_tot").cast("double")).as("yoy_pct"),
-        col("rn"))
-      .orderBy(col("cal_year"), col("tot_rev").desc, col("genre"))
+    ReportTails.quarterPivotTopN(base, grain("genre"), p.topN,
+      Seq("cal_year", "genre", "q1_rev", "q2_rev", "q3_rev", "q4_rev", "tot_rev", "yoy_pct", "rn"))
   }
 
   /** Q2 — purchase spend by the PO's primary genre, densified + QoQ. */
   def q2PurchaseSpend(dw: DwTables, p: Params = Params()): DataFrame = {
-    val lines = dw.factPurchase
-      .filter(col("date_key").between(p.yearFrom * 10000L + 101, p.yearTo * 10000L + 1231))
-      .join(broadcast(dw.dimDate.select("date_key", "cal_year", "cal_quarter")), Seq("date_key"))
+    val lines = window(dw.factPurchase, dw, p)
       .join(broadcast(dw.dimBook.select("book_key", "genre")), Seq("book_key"))
-
-    val perPoGenre = lines
-      .groupBy(col("po_id"), col("cal_year"), col("cal_quarter"), col("genre"))
-      .agg(sum(col("line_total")).as("genre_spend"))
-    val primary = perPoGenre
-      .groupBy(col("po_id"), col("cal_year"), col("cal_quarter"))
-      .agg(
-        sum(col("genre_spend")).as("po_spend"),
-        min(struct((-col("genre_spend")).as("neg"), col("genre"))).getField("genre").as("genre"))
-    val attributed = primary
-      .groupBy("cal_year", "cal_quarter", "genre")
-      .agg(count(lit(1)).as("n_pos"), sum(col("po_spend")).as("spend_dec"))
-      .transform(oneStageTail)
-
-    // densification over the quarter × genre universe. `attributed` is
-    // broadcast into the left join: a sort-merge join over two
-    // single-partition sides would re-shuffle both.
-    val quarters = attributed.select("cal_year", "cal_quarter").distinct()
-    val genres   = attributed.select("genre").distinct()
-    val dense = quarters.crossJoin(broadcast(genres))
-      .join(broadcast(attributed), Seq("cal_year", "cal_quarter", "genre"), "left_outer")
-      .select(
-        col("cal_year"), col("cal_quarter"), col("genre"),
-        coalesce(col("n_pos"), lit(0L)).cast("long").as("n_pos"),
-        coalesce(col("spend_dec"), lit(0).cast("decimal(18,2)")).as("spend_dec"))
-
-    val wQoQ  = Window.partitionBy(col("genre")).orderBy(col("cal_year"), col("cal_quarter"))
-    val wRank = Window.partitionBy(col("cal_year"), col("cal_quarter"))
-      .orderBy(col("spend_dec").desc, col("genre").asc)
-    dense
-      .withColumn("prev_spend", lag(col("spend_dec"), 1).over(wQoQ))
-      .withColumn("rn", row_number().over(wRank).cast("long"))
-      .filter(col("rn") <= p.topN)
-      .filter(!(col("spend_dec") === 0 && coalesce(col("prev_spend"), lit(0)) === 0))
-      .select(
-        col("cal_year"), col("cal_quarter"), col("genre"), col("n_pos"),
-        col("spend_dec").cast("double").as("spend"),
-        col("prev_spend").cast("double").as("prev_spend"),
-        col("rn"))
-      .orderBy(col("cal_year"), col("cal_quarter"), col("spend").desc, col("genre"))
+    ReportTails.primaryKeySpend(lines, grain("genre"), order = Seq("po_id", "cal_year", "cal_quarter"),
+      calendar = Seq(col("cal_year"), col("cal_quarter")), amount = col("line_total"), nCol = "n_pos",
+      topN = p.topN)
   }
 
   /** Q3 — quarterly gross margin by member state with signals. */
   def q3GrossMargin(dw: DwTables, p: Params = Params()): DataFrame = {
     val dimM = p.states.fold(dw.dimMembers)(ss =>
       dw.dimMembers.filter(col("member_state").isin(ss: _*)))
-    val base = dw.factSales
-      .filter(col("date_key").between(p.yearFrom * 10000L + 101, p.yearTo * 10000L + 1231))
-      .join(broadcast(dw.dimDate.select("date_key", "cal_year", "cal_quarter")), Seq("date_key"))
+    val base = window(dw.factSales, dw, p)
       .join(broadcast(dw.dimBook.select("book_key", "sales_price")), Seq("book_key"))
       .join(broadcast(dimM.select("member_key", "member_state")), Seq("member_key"))
       .groupBy(col("cal_year"), col("cal_quarter"), col("member_state"))
@@ -131,26 +79,8 @@ object LibraryReports {
         // at the report edge.
         sum(col("sales_price") * lit("0.8").cast("decimal(2,1)") * col("quantity"))
           .as("cost_dec"))
-      .transform(oneStageTail)
-
-    val wQoQ = Window.partitionBy(col("member_state")).orderBy(col("cal_year"), col("cal_quarter"))
-    base
-      .withColumn("margin_dec", col("rev_dec") - col("cost_dec"))
-      .withColumn("prev_margin", lag(col("margin_dec"), 1).over(wQoQ))
-      .withColumn("qoq_pct",
-        (col("margin_dec") - col("prev_margin")).cast("double") * 100 / col("prev_margin").cast("double"))
-      .withColumn("signal",
-        when(col("qoq_pct").isNull, "N/A")
-          .when(col("qoq_pct") < -p.alertPct, "ALERT")
-          .when(col("qoq_pct") > p.alertPct, "GOOD")
-          .otherwise("STABLE"))
-      .select(
-        col("cal_year"), col("cal_quarter"), col("member_state"),
-        col("rev_dec").cast("double").as("revenue"),
-        col("cost_dec").cast("double").as("cost"),
-        col("margin_dec").cast("double").as("margin"),
-        col("qoq_pct"), col("signal"))
-      .orderBy(col("cal_year"), col("cal_quarter"), col("member_state"))
+    ReportTails.marginSignals(base, grain("member_state"), p.alertPct,
+      Seq("cal_year", "cal_quarter", "member_state", "revenue", "cost", "margin", "qoq_pct", "signal"))
   }
 
   /** Q4 — fine revenue and collection over the fines→payments subdomain

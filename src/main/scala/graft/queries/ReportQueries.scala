@@ -5,7 +5,6 @@ import graft.algo.GlobalRank
 import graft.ops.OpQuery
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** The reference's three parameterized OLAP reports, re-expressed over the
   * testdata star schema (lineitem/orders = facts; part/customer/nation =
@@ -14,6 +13,9 @@ import org.apache.spark.sql.expressions.Window
   * Q1: quarterly sales by genre, pivot + YoY + top-N   (LQY_query1.txt:39-111)
   * Q2: spend by primary genre, densified + QoQ + top-N (LQY_query2.txt:57-215)
   * Q3: quarterly gross margin by state, QoQ + signals  (LQY_query3.txt:62-135)
+  *
+  * Q1–Q3 are star adapters: the joins, filters and first aggregate of
+  * this star, then the tail shared with LibraryReports ([[ReportTails]]).
   *
   * Parameters arrive as case classes (the SQL*Plus ACCEPT/substitution
   * mechanism, LQY_query1.txt:8-11); a disabled filter is simply not added
@@ -25,6 +27,13 @@ object ReportQueries {
   final case class Q2Params(yearFrom: Int = 1995, yearTo: Int = 1996, topN: Int = 7)
   final case class Q3Params(yearFrom: Int = 1995, yearTo: Int = 1997, alertPct: Double = 10.0)
 
+  // This star's calendar: the order date's year and quarter.
+  private val yr = year(col("o_orderdate")).cast("long").as("yr")
+  private val qtr = quarter(col("o_orderdate")).cast("long").as("qtr")
+  private def inYears(from: Int, to: Int): Column =
+    col("o_orderdate") >= lit(s"$from-01-01").cast("date") &&
+      col("o_orderdate") < lit(s"${to + 1}-01-01").cast("date")
+
   /** Q1 — genre(=brand) quarterly revenue: star join → quarter pivot →
     * YoY LAG → ROW_NUMBER top-N per year. */
   def q1(spark: SparkSession, dir: String, p: Q1Params = Q1Params()): DataFrame = {
@@ -34,38 +43,11 @@ object ReportQueries {
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust.select("c_custkey")), col("o_custkey") === col("c_custkey"))
       .join(broadcast(t.part.select("p_partkey", "p_brand")), col("l_partkey") === col("p_partkey"))
-      .filter(col("o_orderdate") >= lit(s"${p.yearFrom}-01-01").cast("date")
-        && col("o_orderdate") < lit(s"${p.yearTo + 1}-01-01").cast("date"))
-      .groupBy(
-        year(col("o_orderdate")).cast("long").as("yr"),
-        quarter(col("o_orderdate")).cast("long").as("qtr"),
-        col("p_brand").as("genre"))
+      .filter(inYears(p.yearFrom, p.yearTo))
+      .groupBy(yr, qtr, col("p_brand").as("genre"))
       .agg(sum(Norm.dec(col("l_extendedprice")) * (lit(1) - col("l_discount").cast("decimal(4,2)"))).as("rev"))
-      .transform(oneStageTail)
-
-    val pivoted = base
-      .groupBy("yr", "genre")
-      .agg(
-        sum(when(col("qtr") === 1, col("rev")).otherwise(lit(0))).cast("double").as("q1_rev"),
-        sum(when(col("qtr") === 2, col("rev")).otherwise(lit(0))).cast("double").as("q2_rev"),
-        sum(when(col("qtr") === 3, col("rev")).otherwise(lit(0))).cast("double").as("q3_rev"),
-        sum(when(col("qtr") === 4, col("rev")).otherwise(lit(0))).cast("double").as("q4_rev"),
-        sum(col("rev")).as("tot_dec"))
-
-    val wYoY  = Window.partitionBy(col("genre")).orderBy(col("yr"))
-    val wRank = Window.partitionBy(col("yr")).orderBy(col("tot_dec").desc, col("genre").asc)
-    pivoted
-      .withColumn("prev_tot_dec", lag(col("tot_dec"), 1).over(wYoY))
-      .withColumn("rn", row_number().over(wRank).cast("long"))
-      .filter(col("rn") <= p.topN)
-      .select(
-        col("yr"), col("genre"), col("q1_rev"), col("q2_rev"), col("q3_rev"), col("q4_rev"),
-        col("tot_dec").cast("double").as("tot_rev"),
-        col("prev_tot_dec").cast("double").as("prev_tot"),
-        ((col("tot_dec") - col("prev_tot_dec")).cast("double") * 100d
-          / col("prev_tot_dec").cast("double")).as("yoy_pct"),
-        col("rn"))
-      .orderBy(col("yr").asc, col("tot_rev").desc, col("genre").asc)
+    ReportTails.quarterPivotTopN(base, Grain("yr", "qtr", "genre"), p.topN,
+      Seq("yr", "genre", "q1_rev", "q2_rev", "q3_rev", "q4_rev", "tot_rev", "prev_tot", "yoy_pct", "rn"))
   }
 
   /** Q1 oracle (DuckDB). */
@@ -110,59 +92,11 @@ object ReportQueries {
   def q2(spark: SparkSession, dir: String, p: Q2Params = Q2Params()): DataFrame = {
     val t = Tables(spark, dir)
     val lines = t.lineitem
-      .join(t.orders.filter(col("o_orderdate") >= lit(s"${p.yearFrom}-01-01").cast("date")
-        && col("o_orderdate") < lit(s"${p.yearTo + 1}-01-01").cast("date")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t.part.select("p_partkey", "p_brand")), col("l_partkey") === col("p_partkey"))
-
-    // per-order per-brand spend, then one more hash agg per order: total
-    // spend + primary brand via min over struct(-spend, brand) — identical
-    // tiebreak to ROW_NUMBER(ORDER BY spend DESC, brand ASC) but with
-    // map-side partial aggregation instead of a per-order window sort.
-    val perOrderBrand = lines
-      .groupBy(col("o_orderkey"), col("o_orderdate"), col("p_brand"))
-      .agg(sum(Norm.dec(col("l_extendedprice"))).as("brand_spend"))
-    val primary = perOrderBrand
-      .groupBy(col("o_orderkey"), col("o_orderdate"))
-      .agg(
-        sum(col("brand_spend")).as("order_spend"),
-        min(struct((-col("brand_spend")).as("neg_spend"), col("p_brand"))).getField("p_brand").as("p_brand"))
-
-    val attributed = primary
-      .groupBy(
-        year(col("o_orderdate")).cast("long").as("yr"),
-        quarter(col("o_orderdate")).cast("long").as("qtr"),
-        col("p_brand").as("genre"))
-      .agg(count(lit(1)).as("n_orders"), sum(col("order_spend")).as("spend_dec"))
-      .transform(oneStageTail)
-
-    // densification: full (yr, qtr) × genre universe, zero-filled.
-    // `attributed` is broadcast into the left join: a sort-merge join
-    // over two single-partition sides would re-shuffle both.
-    val quarters = attributed.select("yr", "qtr").distinct()
-    val genres   = attributed.select("genre").distinct()
-    val dense = quarters
-      .crossJoin(broadcast(genres))
-      .join(broadcast(attributed), Seq("yr", "qtr", "genre"), "left_outer")
-      .select(
-        col("yr"), col("qtr"), col("genre"),
-        coalesce(col("n_orders"), lit(0L)).cast("long").as("n_orders"),
-        coalesce(col("spend_dec"), lit(0).cast("decimal(18,2)")).as("spend_dec"))
-
-    val wQoQ  = Window.partitionBy(col("genre")).orderBy(col("yr"), col("qtr"))
-    val wRank = Window.partitionBy(col("yr"), col("qtr")).orderBy(col("spend_dec").desc, col("genre").asc)
-    dense
-      .withColumn("prev_spend_dec", lag(col("spend_dec"), 1).over(wQoQ))
-      .withColumn("rn", row_number().over(wRank).cast("long"))
-      .filter(col("rn") <= p.topN)
-      // reference drops rows that are zero in both current and prior quarter
-      .filter(!(col("spend_dec") === 0 && coalesce(col("prev_spend_dec"), lit(0)) === 0))
-      .select(
-        col("yr"), col("qtr"), col("genre"), col("n_orders"),
-        col("spend_dec").cast("double").as("spend"),
-        col("prev_spend_dec").cast("double").as("prev_spend"),
-        col("rn"))
-      .orderBy(col("yr"), col("qtr"), col("spend").desc, col("genre"))
+      .join(t.orders.filter(inYears(p.yearFrom, p.yearTo)), col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(t.part.select(col("p_partkey"), col("p_brand").as("genre"))),
+        col("l_partkey") === col("p_partkey"))
+    ReportTails.primaryKeySpend(lines, Grain("yr", "qtr", "genre"), order = Seq("o_orderkey", "o_orderdate"),
+      calendar = Seq(yr, qtr), amount = Norm.dec(col("l_extendedprice")), nCol = "n_orders", topN = p.topN)
   }
 
   def q2Sql(p: Q2Params = Q2Params()): String =
@@ -218,39 +152,16 @@ object ReportQueries {
   def q3(spark: SparkSession, dir: String, p: Q3Params = Q3Params()): DataFrame = {
     val t = Tables(spark, dir)
     val base = t.lineitem
-      .join(t.orders.filter(col("o_orderdate") >= lit(s"${p.yearFrom}-01-01").cast("date")
-        && col("o_orderdate") < lit(s"${p.yearTo + 1}-01-01").cast("date")),
-        col("l_orderkey") === col("o_orderkey"))
+      .join(t.orders.filter(inYears(p.yearFrom, p.yearTo)), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(t.customer.select("c_custkey", "c_nationkey")), col("o_custkey") === col("c_custkey"))
       .join(broadcast(t.nation.select("n_nationkey", "n_name")), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(t.part.select("p_partkey", "p_retailprice")), col("l_partkey") === col("p_partkey"))
-      .groupBy(
-        year(col("o_orderdate")).cast("long").as("yr"),
-        quarter(col("o_orderdate")).cast("long").as("qtr"),
-        col("n_name").as("state"))
+      .groupBy(yr, qtr, col("n_name").as("state"))
       .agg(
         sum(Norm.dec(col("l_extendedprice")) * (lit(1) - col("l_discount").cast("decimal(4,2)"))).as("rev_dec"),
         sum(Norm.dec(col("p_retailprice")) * lit("0.8").cast("decimal(2,1)") * Norm.dec(col("l_quantity"))).as("cost_dec"))
-      .transform(oneStageTail)
-
-    val wQoQ = Window.partitionBy(col("state")).orderBy(col("yr"), col("qtr"))
-    base
-      .withColumn("margin_dec", col("rev_dec") - col("cost_dec"))
-      .withColumn("prev_margin_dec", lag(col("margin_dec"), 1).over(wQoQ))
-      .select(
-        col("yr"), col("qtr"), col("state"),
-        col("rev_dec").cast("double").as("revenue"),
-        col("cost_dec").cast("double").as("cost"),
-        col("margin_dec").cast("double").as("margin"),
-        col("prev_margin_dec").cast("double").as("prev_margin"),
-        ((col("margin_dec") - col("prev_margin_dec")).cast("double") * 100d
-          / col("prev_margin_dec").cast("double")).as("qoq_pct"))
-      .withColumn("signal",
-        when(col("qoq_pct").isNull, "N/A")
-          .when(col("qoq_pct") < -p.alertPct, "ALERT")
-          .when(col("qoq_pct") > p.alertPct, "GOOD")
-          .otherwise("STABLE"))
-      .orderBy(col("yr"), col("qtr"), col("state"))
+    ReportTails.marginSignals(base, Grain("yr", "qtr", "state"), p.alertPct,
+      Seq("yr", "qtr", "state", "revenue", "cost", "margin", "prev_margin", "qoq_pct", "signal"))
   }
 
   def q3Sql(p: Q3Params = Q3Params()): String =

@@ -13,6 +13,8 @@ package object queries {
     * aggregate's own stage, with no further exchange, no range-sampling
     * job for the sort and no AQE re-plan in between. `repartition(1)`
     * would add a shuffle of its own. Not for a grain that grows with the
-    * data (per order, per PO, per customer). */
+    * data (per order, per PO, per customer). Applied once in each of the
+    * three shared Q1–Q3 tails ([[ReportTails]]) and in
+    * LibraryReports' Q4 and Q5. */
   private[queries] def oneStageTail(grainBounded: DataFrame): DataFrame = grainBounded.coalesce(1)
 }

@@ -3,11 +3,11 @@ package graft.queries
 import graft.SparkSuite
 import graft.etl.DwTables
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Min}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -123,6 +123,33 @@ class ReportPlanShapeSpec extends SparkSuite {
           e.outputPartitioning.toString
       }
       assert(ranged.isEmpty, s"$name: range-partitioned exchanges: ${ranged.mkString("; ")}")
+    }
+  }
+
+  /** Q2 densifies over the quarter × genre universe of its `attributed`
+    * aggregate. The star join under it and the per-order aggregate that
+    * picks each order's primary genre (the only final `min`) must appear
+    * once in the initial plan: a second, column-pruned consumer of
+    * `attributed` is a distinct subtree that AQE does not reuse, so it
+    * runs the whole star join again. */
+  Seq(
+    ("LibraryReports.q2PurchaseSpend", "fact_purchase", () => LibraryReports.q2PurchaseSpend(dw)),
+    ("ReportQueries.q2", "lineitem", () => ReportQueries.q2(spark, sf0001))
+  ).foreach { case (name, fact, report) =>
+    test(s"$name: the star join and the per-order primary pick appear once in the plan") {
+      val root = report().queryExecution.executedPlan
+      val nodes = root +: below(root)
+      val factScans = nodes.count {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName.startsWith(fact))
+        case _                     => false
+      }
+      val primaryPicks = nodes.count {
+        case a: BaseAggregateExec =>
+          a.aggregateExpressions.exists(e => e.mode == Final && e.aggregateFunction.isInstanceOf[Min])
+        case _ => false
+      }
+      assert(factScans == 1, s"$name: $factScans scans of $fact in\n$root")
+      assert(primaryPicks == 1, s"$name: $primaryPicks per-order primary-genre aggregates in\n$root")
     }
   }
 }
