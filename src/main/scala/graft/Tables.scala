@@ -12,34 +12,15 @@ import org.apache.spark.sql.types.DecimalType
   * (spark.read.parquet → pushdown) is identical.
   */
 final class Tables(spark: SparkSession, dir: String) {
-  /** Plan the table with its memoized inferred schema: a bare
-    * `spark.read.parquet` re-infers the schema on EVERY call, and
-    * Spark 4's ParquetUtils.inferSchema runs the footer read as a
-    * driver-blocking Spark JOB — one per table per query build, the
-    * dominant term of the small-query driver floor (a 264-query bench
-    * sweep re-paid it thousands of times). The memo is pure metadata
-    * (the schema the same inference returns), keyed by the table
-    * directory's (path, mtime, len) like SnapshotStore.manifestMemo,
-    * so a regenerated testdata dir re-infers. At 100 TB the same
-    * discipline is "read the schema from the catalog/manifest, not
-    * from data-file footers" — see SnapshotStore.readFilesForVersion. */
+  /** Plan the table with its memoized inferred schema
+    * ([[Artifacts.readParquetMemo]], keyed by the table file's own
+    * status, so a regenerated testdata dir re-infers). At 100 TB the
+    * same discipline is "read the schema from the catalog/manifest,
+    * not from data-file footers" — see
+    * SnapshotStore.readFilesForVersion. */
   private def t(name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = scala.util.Try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-      (path, st.getModificationTime, st.getLen)
-    }.toOption
-    key.flatMap(k => Option(Tables.schemaMemo.get(k))) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach { k =>
-          if (Tables.schemaMemo.size > 256) Tables.schemaMemo.clear()
-          Tables.schemaMemo.put(k, df.schema): Unit
-        }
-        df
-    }
+    Artifacts.readParquetMemo(spark, path, new org.apache.hadoop.fs.Path(path))
   }
 
   def region: DataFrame     = t("region")
@@ -73,14 +54,6 @@ final class Tables(spark: SparkSession, dir: String) {
 
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
-
-  /** (path, mtime, len) → inferred schema; see [[Tables.t]]. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      org.apache.spark.sql.types.StructType]()
-
-  /** Test hook: drop every memoized schema (spec isolation). */
-  private[graft] def clearSchemaMemo(): Unit = schemaMemo.clear()
 }
 
 /** Output-normalization helpers shared by every `SparkEntry.queries` entry.

@@ -213,7 +213,7 @@ object SnapshotStore {
     * terminator requirement a truncated file list would resolve as a
     * committed SUBSET of the version and GC would collect the
     * truncated-away files. Only fully-terminated manifests commit. */
-  private final case class ManifestData(
+  private[etl] final case class ManifestData(
       snap: String, asOf: Option[Long], files: Seq[String],
       stats: Seq[FileStat], typedStats: Seq[TypedFileStat],
       specs: Seq[PartitionSpec], partVals: Seq[FilePartition],
@@ -226,6 +226,13 @@ object SnapshotStore {
         org.apache.spark.sql.types.DataType.fromJson(j)
           .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
   }
+
+  /** Per-file records as a manifest's `s`, `t`, `v`, `r` and `n` lines
+    * hold them: what [[promote]]'s stats scan yields for a commit's own
+    * files, handed to [[planManifest]]. */
+  private[etl] final case class FileRecords(stats: Seq[FileStat] = Nil,
+      typedStats: Seq[TypedFileStat] = Nil, partVals: Seq[FilePartition] = Nil,
+      rowCounts: Map[String, Long] = Map.empty, nullStats: Seq[FileNullStat] = Nil)
 
   private def manifestId(name: String): Option[Long] =
     if (name.startsWith(ManifestPrefix))
@@ -267,7 +274,13 @@ object SnapshotStore {
     }.toOption.filter(_.nonEmpty)
   }
 
-  /** Manifest content: line 1 = primary snapshot dir name; line 2
+  /** The manifest text of `m` — the one writer of every line kind, and
+    * the inverse of [[parseManifest]] (`parseManifest(renderManifest(m))
+    * == m` for every `m` the write path can form: no whitespace inside
+    * a token, no newline or edge whitespace in a path, one `v` value per
+    * spec).
+    *
+    * Manifest content: line 1 = primary snapshot dir name; line 2
     * (optional, may be blank) = the commit's pinned as-of timestamp in
     * epoch micros; lines 3+ (optional) = `f <relative path>` explicit
     * file list, `s <col> <min> <max> <relative path>` per-file LONG
@@ -314,8 +327,26 @@ object SnapshotStore {
     * silently renumber every `v` tuple's dimensions, so the sound
     * degrade is "unpartitioned: every file must-scans" (defense in
     * depth for hand-edited manifests; the write path rejects such
-    * specs before committing). */
-  private def parseManifest(content: String): ManifestData = {
+    * specs before committing). Readers do not depend on the order of
+    * the lines after line 2. */
+  private[etl] def renderManifest(m: ManifestData): String = {
+    def vals(v: Seq[Option[Long]]) = v.map(_.fold("?")(_.toString)).mkString(" ")
+    (Seq(m.snap, m.asOf.fold("")(_.toString)) ++
+      m.files.map(f => s"f $f") ++
+      m.schemaJson.map(j => "c " + java.util.Base64.getEncoder.encodeToString(j.getBytes("UTF-8"))) ++
+      m.specs.map(ps => s"p ${ps.transform} ${ps.col}") ++
+      m.stats.map(st => s"s ${st.col} ${st.min} ${st.max} ${st.file}") ++
+      m.typedStats.map(st =>
+        s"t ${st.kind} ${st.col} ${st.lo} ${st.hi} ${if (st.hiTrunc) "T" else "E"} ${st.file}") ++
+      m.rowCounts.toSeq.sortBy(_._1).map { case (f, rc) => s"r $rc $f" } ++
+      m.nullStats.map(st => s"n ${st.col} ${st.nulls} ${st.file}") ++
+      m.partVals.map(pv => s"v ${vals(pv.values)} ${pv.file}") ++
+      m.txns.toSeq.sortBy(_._1).map { case (a, v) => s"x $a $v" } ++
+      (if (m.terminated) Seq("end") else Nil)).mkString("\n")
+  }
+
+  /** Manifest text → [[ManifestData]]; see [[renderManifest]]. */
+  private[etl] def parseManifest(content: String): ManifestData = {
     val lines = content.split("\n", -1)
     val asOf = if (lines.length >= 2) scala.util.Try(lines(1).trim.toLong).toOption else None
     val files = lines.drop(2).collect { case l if l.startsWith("f ") => l.drop(2).trim }
@@ -442,14 +473,19 @@ object SnapshotStore {
     * because a spec can also arrive PARSED from a hand-edited
     * manifest; r16 ADVICE). */
   private[etl] def transformColumn(spec: PartitionSpec,
-      df: DataFrame): org.apache.spark.sql.Column = {
+      df: DataFrame): org.apache.spark.sql.Column = transformColumn(spec, df.schema)
+
+  /** [[transformColumn]] over a bare schema — builds the column without
+    * a session, so [[planManifest]] can test whether a spec still fits. */
+  private def transformColumn(spec: PartitionSpec,
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{month, year}
     if (spec.col.exists(_.isWhitespace) || spec.col.contains("`") ||
         spec.transform.exists(_.isWhitespace))
       throw new IllegalArgumentException(
         s"SnapshotStore: partition spec '$spec' carries whitespace or a backtick — " +
           "rejected everywhere a spec is consumed, not only at promote")
-    val dt = df.schema(spec.col).dataType
+    val dt = schema(spec.col).dataType
     (spec.transform, FilePrune.kindOf(dt).getOrElse("")) match {
       case ("identity", "long") => col(spec.col).cast("long")
       case ("year", "date")     => year(col(spec.col)).cast("long")
@@ -479,10 +515,6 @@ object SnapshotStore {
     }
   }
 
-  /** Resolve ONE manifest to its committed content: it parses WITH the
-    * content terminator and the PRIMARY snapshot directory carries
-    * `_SUCCESS` — a manifest whose write raced a crash (no content, or
-    * a truncated prefix of it) resolves to None. */
   /** Parsed-manifest memo (r18). Committed manifests are WRITE-ONCE by
     * the claim protocol (create-no-overwrite + content + terminator;
     * no rewrite path exists), so a parse keyed by (path, length,
@@ -504,6 +536,10 @@ object SnapshotStore {
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), ManifestData]()
   private[etl] def clearManifestMemo(): Unit = manifestMemo.clear()
 
+  /** Resolve ONE manifest to its committed content: it parses WITH the
+    * content terminator and the PRIMARY snapshot directory carries
+    * `_SUCCESS` — a manifest whose write raced a crash (no content, or
+    * a truncated prefix of it) resolves to None. */
   private def resolve(fs: FileSystem, tgt: Path, manifest: Path): Option[ManifestData] = {
     val key = scala.util.Try {
       val st = fs.getFileStatus(manifest)
@@ -578,12 +614,16 @@ object SnapshotStore {
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
 
+  /** The `listed` manifests that resolve, newest first — lazy, so a
+    * caller that stops early reads no older manifest. */
+  private def committed(fs: FileSystem, tgt: Path,
+      listed: Seq[(Long, Path)]): Iterator[(Long, ManifestData)] =
+    listed.iterator.flatMap { case (id, p) => resolve(fs, tgt, p).map(id -> _) }
+
   /** The newest COMMITTED manifest — walks newest-first and stops at the
     * first manifest that resolves (normally the very first). */
   private def currentManifest(fs: FileSystem, tgt: Path): Option[(Long, ManifestData)] =
-    manifestFiles(fs, tgt).iterator
-      .map { case (id, p) => (id, resolve(fs, tgt, p)) }
-      .collectFirst { case (id, Some(m)) => (id, m) }
+    committed(fs, tgt, manifestFiles(fs, tgt)).nextOption()
 
   private[graft] def currentSnapshot(fs: FileSystem, tgt: Path): Option[(Long, Path)] =
     currentManifest(fs, tgt).map { case (id, m) => (id, new Path(tgt, m.snap)) }
@@ -754,9 +794,8 @@ object SnapshotStore {
     * None when no retained commit qualifies. */
   def versionAsOf(spark: SparkSession, dir: String, asOfMicros: Long): Option[Long] = {
     val (fs, tgt) = fsOf(spark, dir)
-    manifestFiles(fs, tgt).iterator
-      .map { case (id, p) => (id, resolve(fs, tgt, p)) }
-      .collectFirst { case (id, Some(m)) if m.asOf.exists(_ <= asOfMicros) => id }
+    committed(fs, tgt, manifestFiles(fs, tgt))
+      .collectFirst { case (id, m) if m.asOf.exists(_ <= asOfMicros) => id }
   }
 
   /** The committed state restricted to string `column` ∈ [lo, hi]
@@ -1004,9 +1043,8 @@ object SnapshotStore {
     * see the read-laziness contract above. */
   def readAsOf(spark: SparkSession, dir: String, asOfMicros: Long): Option[DataFrame] = {
     val (fs, tgt) = fsOf(spark, dir)
-    manifestFiles(fs, tgt).iterator
-      .map { case (_, p) => resolve(fs, tgt, p) }
-      .collectFirst { case Some(m) if m.asOf.exists(_ <= asOfMicros) =>
+    committed(fs, tgt, manifestFiles(fs, tgt))
+      .collectFirst { case (_, m) if m.asOf.exists(_ <= asOfMicros) =>
         readManifest(spark, tgt, m) }
   }
 
@@ -1219,212 +1257,26 @@ object SnapshotStore {
             s"commit) — refusing to race it; snapshot $snapName is unpromoted and GC-eligible")
     }
     val ownFiles = dirDataFiles(fs, tgt, snapName)
-    val fileLines =
-      if (reuseFiles.isEmpty) ""
-      else (reuseFiles ++ ownFiles).map("\nf " + _).mkString
-    // per-file column stats (statsCol/statsCols): min/max per stat
-    // column — computed for THIS commit's own files by ONE scan of the
-    // just-written delta regardless of column count (O(delta), and the
-    // files are page-cache warm), CARRIED FORWARD from the previous
-    // manifest for reused files (a reused file's content is immutable
-    // by construction, so its stats never go stale — ALL its carried
-    // stats stay valid, whichever columns this commit stats). All-null
-    // files carry no stat line and are never prunable — absence means
-    // "must scan", the safe default. Integral columns record `s`
-    // (long) lines; date and string columns record typed `t` lines
-    // ([[TypedFileStat]]); anything else fails loudly — a lossy cast
-    // would record bounds the true values escape, and a pruner
-    // trusting them would silently skip a file it must scan.
-    // reused files keep their stats UNCONDITIONALLY — even a commit
-    // that stats nothing itself (restore's metadata-only promote, a
-    // plain refresh without statsCol) must not silently drop the
-    // skipping index its reused files already carry
-    // one head-manifest read serves the carried metadata: txn markers
-    // and the PARTITION SPEC carry UNCONDITIONALLY (both are table
-    // metadata surviving even a full overwrite — a merge whose batch
-    // touches every file commits with reuseFiles = Nil, and dropping
-    // the spec there would silently lose the partition index; Delta
-    // keeps txn versions and partitioning across any commit the same
-    // way); stats and per-file partition VALUES carry only with file
-    // reuse (they describe immutable reused files)
-    val prevAny: Option[ManifestData] = currentManifest(fs, tgt).map(_._2)
-    val prevManifest: Option[ManifestData] =
-      if (reuseFiles.isEmpty) None else prevAny
-    // effective partition specs: the caller's ordered list, or — for an
-    // incremental commit — CARRIED from the head manifest, so a chain of
-    // refreshes/merges keeps its table partitioned without re-declaring
-    // the specs on every commit. A caller-passed list that differs from
-    // the head's is partition EVOLUTION: it applies from this commit
-    // forward. The carried list survives ALL-OR-NOTHING: a FULL REWRITE
-    // (no reuse) that dropped or retyped ANY spec column defines a table
-    // the spec list can no longer describe — carrying a partial list
-    // would silently renumber the dimensions, and carrying the full one
-    // would make every readPartitionRanges throw forever; dropping the
-    // whole list (the only way to shed specs, and the sound one) leaves
-    // an unpartitioned head.
-    val effSpecs: Seq[PartitionSpec] =
-      if (callerSpecs.nonEmpty) callerSpecs
-      else prevAny.map(_.specs).getOrElse(Nil) match {
-        case carried if carried.nonEmpty && (reuseFiles.nonEmpty ||
-            carried.forall(ps => scala.util.Try(transformColumn(ps, df)).isSuccess)) =>
-          carried
-        case _ => Nil
-      }
-    val carriedLines: Seq[String] = if (reuseFiles.isEmpty) Nil else {
-      val reused = reuseFiles.toSet
-      prevManifest.toSeq.flatMap(_.stats)
-        .filter(st => reused.contains(st.file))
-        .map(st => s"s ${st.col} ${st.min} ${st.max} ${st.file}") ++
-      prevManifest.toSeq.flatMap(_.typedStats)
-        .filter(st => reused.contains(st.file))
-        .map(st => s"t ${st.kind} ${st.col} ${st.lo} ${st.hi} ${if (st.hiTrunc) "T" else "E"} ${st.file}") ++
-      // row/null counts describe immutable reused files like min/max
-      // stats do — carried unconditionally (r17)
-      prevManifest.toSeq.flatMap(_.rowCounts.toSeq.sortBy(_._1))
-        .filter { case (f, _) => reused.contains(f) }
-        .map { case (f, rc) => s"r $rc $f" } ++
-      prevManifest.toSeq.flatMap(_.nullStats)
-        .filter(st => reused.contains(st.file))
-        .map(st => s"n ${st.col} ${st.nulls} ${st.file}")
-    }
-    // reused files keep their partition values ONLY when the spec list
-    // is unchanged: after an evolution the old `v` tuples were computed
-    // under the old transforms (or carry the wrong arity) and would
-    // prune wrongly — dropping them degrades pre-evolution files to
-    // must-scan, the sound default (Iceberg's old-data-keeps-old-spec,
-    // expressed per manifest)
-    val carriedPartLines: Seq[String] =
-      if (reuseFiles.isEmpty || effSpecs.isEmpty) Nil
-      else if (prevManifest.exists(_.specs == effSpecs)) {
-        val reused = reuseFiles.toSet
-        prevManifest.toSeq.flatMap(_.partVals)
-          .filter(pv => reused.contains(pv.file))
-          .map(pv => s"v ${pv.values.map(_.fold("?")(_.toString)).mkString(" ")} ${pv.file}")
-      } else Nil
-    val (ownLines, ownPartLines): (Seq[String], Seq[String]) = {
-      import org.apache.spark.sql.functions.{col => fcol, count => fcount,
-        expr, max => fmax, min => fmin}
-      if (ownFiles.isEmpty || (effCols.isEmpty && effSpecs.isEmpty)) (Nil, Nil)
-      else {
-        val reread = spark.read.parquet(new Path(tgt, snapName).toString)
-        // a CARRIED spec may reference a column this commit's own rows
-        // lack or cannot transform (additive-evolution edge): its own
-        // files then record no value on that DIMENSION (`?` when other
-        // dimensions are concrete, no line when none is) and must-scan
-        // there — absence, never a wrong value
-        val specTxs: Seq[Option[org.apache.spark.sql.Column]] = effSpecs.map(ps =>
-          scala.util.Try(transformColumn(ps, reread)).toOption)
-        val availDims = specTxs.zipWithIndex.collect { case (Some(tx), d) => (tx, d) }
-        // ONE O(delta) scan computes everything per file: row count
-        // (`r`), per stat column min/max + NON-NULL count (`s`/`t` +
-        // `n` — nulls = rows − non-nulls; count(col) is null-skipping
-        // exactly like min/max, and null-ness is transform-independent
-        // so the raw column serves every stat kind), and per spec
-        // dimension the transform's min/max (a `v` component exactly
-        // when single-valued and non-null)
-        val kinds = effCols.map(c => FilePrune.kindOf(df.schema(c).dataType).get)
-        val statAggs = effCols.zip(kinds).zipWithIndex.flatMap { case ((c, kind), i) =>
-          val base = FilePrune.statValue(fcol(c), kind)
-          Seq(fmin(base).as(s"__mn$i"), fmax(base).as(s"__mx$i"),
-            fcount(fcol(c)).as(s"__nn$i"))
-        }
-        val specAggs = availDims.flatMap { case (tx, d) =>
-          Seq(fmin(tx).as(s"__pmn$d"), fmax(tx).as(s"__pmx$d")) }
-        val aggs = Seq(fcount(lit(1)).as("__rc")) ++ statAggs ++ specAggs
-        if (statAggs.isEmpty && specAggs.isEmpty) (Nil, Nil)
-        else {
-          val selCols = (effCols ++ effSpecs.map(_.col)).distinct
-            .filter(reread.columns.contains)
-          val rows = reread
-            .select(expr("regexp_extract(input_file_name(), '([^/]+/[^/]+)$', 1)").as("__f")
-              +: selCols.map(fcol): _*)
-            .groupBy("__f")
-            .agg(aggs.head, aggs.tail: _*)
-            .collect().toSeq
-          // row layout: 0 = __f, 1 = __rc, stat col i at (2+3i, 3+3i,
-          // 4+3i), then available spec dim j at (base+2j, base+2j+1)
-          val pBase = 2 + 3 * effCols.size
-          val statLs = rows.flatMap { r =>
-            val file = r.getString(0)
-            val rc   = r.getLong(1)
-            Seq(s"r $rc $file") ++
-            effCols.zip(kinds).zipWithIndex.flatMap { case ((c, kind), i) =>
-              val (mnI, mxI, nnI) = (2 + 3 * i, 3 + 3 * i, 4 + 3 * i)
-              val nullLine = s"n $c ${rc - r.getLong(nnI)} $file"
-              val rangeLine =
-                if (r.isNullAt(mnI) || r.isNullAt(mxI)) None
-                else kind match {
-                  case "str" =>
-                    val (loP, _)    = truncBytes(r.getString(mnI))
-                    val (hiP, hiT)  = truncBytes(r.getString(mxI))
-                    Some(s"t str $c ${encB64(loP)} ${encB64(hiP)} ${if (hiT) "T" else "E"} $file")
-                  case "long" => Some(s"s $c ${r.getLong(mnI)} ${r.getLong(mxI)} $file")
-                  case typed  => Some(s"t $typed $c ${r.getLong(mnI)} ${r.getLong(mxI)} E $file")
-                }
-              rangeLine.toSeq :+ nullLine
-            }
-          }
-          val availIdx: Map[Int, Int] = availDims.map(_._2).zipWithIndex.toMap
-          val partLs = if (availDims.isEmpty) Nil else rows.flatMap { r =>
-            val vals: Seq[Option[Long]] = effSpecs.indices.map { d =>
-              availIdx.get(d).flatMap { j =>
-                val (pmnI, pmxI) = (pBase + 2 * j, pBase + 2 * j + 1)
-                if (r.isNullAt(pmnI) || r.isNullAt(pmxI) ||
-                    r.getLong(pmnI) != r.getLong(pmxI)) None
-                else Some(r.getLong(pmnI))
-              }
-            }
-            if (vals.forall(_.isEmpty)) None
-            else Some(s"v ${vals.map(_.fold("?")(_.toString)).mkString(" ")} ${r.getString(0)}")
-          }
-          // a zero-ROW own file produces no group row above (the agg
-          // emits no frame row for it) but its row count is still a
-          // KNOWN fact — record `r 0` (Delta's numRecords=0 shape) so
-          // the count index stays COMPLETE: the DSv2 metadata-only
-          // aggregates require a row count for every file, and a full
-          // delete's empty rewrite must not silently break them
-          val statted = rows.map(_.getString(0)).toSet
-          val zeroRowLs = ownFiles.filterNot(statted).map(f => s"r 0 $f")
-          (statLs ++ zeroRowLs, partLs)
-        }
-      }
-    }
-    val statLines = (ownLines ++ carriedLines).map("\n" + _).mkString
-    val specLine  = effSpecs.map(ps => s"\np ${ps.transform} ${ps.col}").mkString
-    val partLines = (ownPartLines ++ carriedPartLines).map("\n" + _).mkString
-    // recorded table schema (r17 — see readParquet): a full rewrite
-    // records the delta's own schema; a file-reuse commit records
-    // prev ∪ delta additively (type conflicts throw — better at write
-    // than the fallback's at-read failure). Reuse over a manifest with
-    // NO recorded schema records nothing — the reused files' union is
-    // unknowable without the footer reads this feature exists to avoid,
-    // and absence just keeps the mergeSchema fallback for this version.
-    val schemaLine: String = {
-      val recorded: Option[org.apache.spark.sql.types.StructType] =
-        if (reuseFiles.isEmpty) Some(df.schema)
-        else prevAny.flatMap(_.schema).map(ps => mergeSchemas(ps, df.schema))
-      recorded.map(s => "\nc " + java.util.Base64.getEncoder.encodeToString(
-        asNullable(s).asInstanceOf[org.apache.spark.sql.types.StructType]
-          .json.getBytes("UTF-8"))).getOrElse("")
-    }
+    // one head-manifest read serves everything the plan carries forward
+    val prev: Option[ManifestData] = currentManifest(fs, tgt).map(_._2)
     // re-check the txn marker against the freshest head read (narrows
     // the pre-check→claim window; the exclusive claim + occ remain the
     // final arbiter for what this check cannot see)
     txn.foreach { case (app, ver) =>
-      if (prevAny.exists(_.txns.get(app).exists(_ >= ver)))
+      if (prev.exists(_.txns.get(app).exists(_ >= ver)))
         throw new TxnAlreadyAppliedException(
           s"SnapshotStore: txn ($app, $ver) was applied concurrently on $dir — " +
             s"treat as success; snapshot $snapName is unpromoted and GC-eligible")
     }
-    val txnLines = (prevAny.map(_.txns).getOrElse(Map.empty) ++ txn.toMap)
-      .toSeq.sortBy(_._1).map { case (a, v) => s"\nx $a $v" }.mkString
+    val own = ownRecords(spark, new Path(tgt, snapName), ownFiles, df.schema, effCols,
+      nextSpecs(prev, reuseFiles, callerSpecs, df.schema))
+    val next = planManifest(prev, snapName, asOfMicros, reuseFiles, ownFiles, own,
+      callerSpecs, df.schema, txn)
     // the `end` terminator line commits the content: the exclusive
     // create is atomic but this write is not, and a truncated file list
     // must never resolve as a committed subset (see ManifestData)
-    val content = snapName + "\n" + asOfMicros.fold("")(_.toString) +
-      fileLines + schemaLine + specLine + statLines + partLines + txnLines + "\nend"
     val mPath = new Path(tgt, f"$ManifestPrefix$nextId%020d")
-    if (!claimFile(fs, mPath, content.getBytes("UTF-8"))) {
+    if (!claimFile(fs, mPath, renderManifest(next).getBytes("UTF-8"))) {
       val msg = s"SnapshotStore: manifest id $nextId was claimed concurrently — " +
         s"snapshot $snapName is unpromoted and GC-eligible"
       if (expectCurrent.isDefined) throw new ConflictException(msg)
@@ -1432,6 +1284,161 @@ object SnapshotStore {
     }
     gc(fs, tgt, keep, snapName)
     nextId
+  }
+
+  /** The commit's effective partition specs: the caller's ordered list,
+    * or — when it passes none — the head's, CARRIED so a chain of
+    * refreshes/merges keeps its table partitioned without re-declaring
+    * the specs on every commit. A caller-passed list that differs from
+    * the head's is partition EVOLUTION: it applies from this commit
+    * forward. The carried list survives ALL-OR-NOTHING, even across a
+    * full rewrite (a merge whose batch touches every file commits with
+    * no reuse, and must not silently lose the partition index) — but a
+    * full rewrite that dropped or retyped ANY spec column defines a
+    * table the list can no longer describe: carrying a partial list
+    * would silently renumber the dimensions, and carrying the full one
+    * would make every readPartitionRanges throw forever, so the whole
+    * list drops (the only way to shed specs) and the head is
+    * unpartitioned. */
+  private def nextSpecs(prev: Option[ManifestData], reuseFiles: Seq[String],
+      callerSpecs: Seq[PartitionSpec],
+      schema: org.apache.spark.sql.types.StructType): Seq[PartitionSpec] =
+    if (callerSpecs.nonEmpty) callerSpecs
+    else prev.map(_.specs).getOrElse(Nil) match {
+      case carried if carried.nonEmpty && (reuseFiles.nonEmpty ||
+          carried.forall(ps => scala.util.Try(transformColumn(ps, schema)).isSuccess)) =>
+        carried
+      case _ => Nil
+    }
+
+  /** The next commit's manifest — the pure half of [[promote]]: no
+    * filesystem, no Spark job. `prev` is the committed head, `own` the
+    * records of this commit's `ownFiles`, written under primary
+    * directory `snap` with table `schema`.
+    *
+    *  - The FILE LIST is explicit (`reuseFiles ++ ownFiles`) only on a
+    *    reuse commit; a full rewrite lists none (every file of `snap`).
+    *  - Reused files CARRY their stats, row and null counts
+    *    unconditionally: their content is immutable, so the records
+    *    never go stale, and a commit that stats nothing itself
+    *    (restore's metadata-only promote) must not drop the skipping
+    *    index its reused files already carry.
+    *  - Reused files carry their `v` values ONLY when the spec list is
+    *    unchanged: after an evolution the old tuples were computed under
+    *    other transforms (or another arity) and would prune wrongly, so
+    *    the files degrade to must-scan (Iceberg's old-data-keeps-old-spec,
+    *    expressed per manifest). Specs: see [[nextSpecs]].
+    *  - The recorded SCHEMA (the `c` line, see readParquet) is `schema`
+    *    on a full rewrite and prev ∪ `schema` on a reuse commit
+    *    ([[mergeSchemas]]: a type conflict throws at write, not at
+    *    read); reuse over a manifest with NO recorded schema records
+    *    none — the reused files' union is unknowable without the footer
+    *    reads the line exists to avoid.
+    *  - TXN markers always carry (table metadata that survives even a
+    *    full overwrite, as in Delta), plus `txn`. */
+  private[etl] def planManifest(prev: Option[ManifestData], snap: String,
+      asOf: Option[Long], reuseFiles: Seq[String], ownFiles: Seq[String],
+      own: FileRecords, callerSpecs: Seq[PartitionSpec],
+      schema: org.apache.spark.sql.types.StructType,
+      txn: Option[(String, Long)]): ManifestData = {
+    val specs = nextSpecs(prev, reuseFiles, callerSpecs, schema)
+    val reused = reuseFiles.toSet
+    val carried = prev.filter(_ => reuseFiles.nonEmpty)
+    def carry[A](records: ManifestData => Seq[A])(file: A => String): Seq[A] =
+      carried.toSeq.flatMap(records).filter(a => reused.contains(file(a)))
+    ManifestData(snap, asOf,
+      files = if (reuseFiles.isEmpty) Nil else reuseFiles ++ ownFiles,
+      stats = own.stats ++ carry(_.stats)(_.file),
+      typedStats = own.typedStats ++ carry(_.typedStats)(_.file),
+      specs = specs,
+      partVals = own.partVals ++
+        (if (carried.exists(_.specs == specs)) carry(_.partVals)(_.file) else Nil),
+      rowCounts = carry(_.rowCounts.toSeq)(_._1).toMap ++ own.rowCounts,
+      nullStats = own.nullStats ++ carry(_.nullStats)(_.file),
+      schemaJson = (if (reuseFiles.isEmpty) Some(schema)
+        else carried.flatMap(_.schema).map(mergeSchemas(_, schema))).map(asNullable(_).json),
+      txns = prev.map(_.txns).getOrElse(Map.empty) ++ txn,
+      terminated = true)
+  }
+
+  /** This commit's own per-file records, from ONE O(delta) scan of its
+    * just-written (page-cache warm) `snapDir` however many columns it
+    * stats: the row count; per stat column the min/max (an `s` record
+    * for an integral column, a `t` record for a date, timestamp or
+    * string one — a lossy cast would record bounds the true values
+    * escape) and the NON-NULL count (nulls = rows − non-nulls;
+    * count(col) skips nulls exactly like min/max, and null-ness is
+    * transform-independent, so the raw column serves every kind); per
+    * spec dimension the transform's min/max, a `v` value exactly when
+    * single-valued and non-null. An all-null column records no range
+    * and is never prunable — absence means "must scan". No scan runs
+    * when the commit stats nothing and declares no spec. */
+  private def ownRecords(spark: SparkSession, snapDir: Path, ownFiles: Seq[String],
+      schema: org.apache.spark.sql.types.StructType, effCols: Seq[String],
+      specs: Seq[PartitionSpec]): FileRecords = {
+    import org.apache.spark.sql.functions.{col => fcol, count => fcount,
+      expr, max => fmax, min => fmin}
+    if (ownFiles.isEmpty || (effCols.isEmpty && specs.isEmpty)) return FileRecords()
+    val reread = spark.read.parquet(snapDir.toString)
+    // a CARRIED spec may reference a column this commit's own rows lack
+    // or cannot transform (additive-evolution edge): its own files then
+    // record no value on that DIMENSION (`?` when other dimensions are
+    // concrete, no record when none is) and must-scan there — absence,
+    // never a wrong value
+    val availDims = specs.zipWithIndex.flatMap { case (ps, d) =>
+      scala.util.Try(transformColumn(ps, reread)).toOption.map(_ -> d) }
+    val kinds = effCols.map(c => FilePrune.kindOf(schema(c).dataType).get)
+    val statAggs = effCols.zip(kinds).zipWithIndex.flatMap { case ((c, kind), i) =>
+      val base = FilePrune.statValue(fcol(c), kind)
+      Seq(fmin(base).as(s"__mn$i"), fmax(base).as(s"__mx$i"), fcount(fcol(c)).as(s"__nn$i"))
+    }
+    val specAggs = availDims.flatMap { case (tx, d) =>
+      Seq(fmin(tx).as(s"__pmn$d"), fmax(tx).as(s"__pmx$d")) }
+    if (statAggs.isEmpty && specAggs.isEmpty) return FileRecords()
+    val aggs = Seq(fcount(lit(1)).as("__rc")) ++ statAggs ++ specAggs
+    val selCols = (effCols ++ specs.map(_.col)).distinct.filter(reread.columns.contains)
+    val rows = reread
+      .select(expr("regexp_extract(input_file_name(), '([^/]+/[^/]+)$', 1)").as("__f")
+        +: selCols.map(fcol): _*)
+      .groupBy("__f")
+      .agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq
+    // row layout: 0 = __f, 1 = __rc, stat col i at (2+3i, 3+3i, 4+3i),
+    // then available spec dim j at (pBase+2j, pBase+2j+1)
+    val pBase = 2 + 3 * effCols.size
+    val ranges = for (r <- rows; ((c, kind), i) <- effCols.zip(kinds).zipWithIndex
+        if !r.isNullAt(2 + 3 * i) && !r.isNullAt(3 + 3 * i)) yield (r, c, kind, 2 + 3 * i)
+    val availIdx: Map[Int, Int] = availDims.map(_._2).zipWithIndex.toMap
+    val partVals = if (availDims.isEmpty) Nil else rows.flatMap { r =>
+      val vals: Seq[Option[Long]] = specs.indices.map { d =>
+        availIdx.get(d).flatMap { j =>
+          val (mn, mx) = (pBase + 2 * j, pBase + 2 * j + 1)
+          if (r.isNullAt(mn) || r.isNullAt(mx) || r.getLong(mn) != r.getLong(mx)) None
+          else Some(r.getLong(mn))
+        }
+      }
+      if (vals.forall(_.isEmpty)) None else Some(FilePartition(r.getString(0), vals))
+    }
+    FileRecords(
+      stats = ranges.collect { case (r, c, "long", i) =>
+        FileStat(r.getString(0), c, r.getLong(i), r.getLong(i + 1)) },
+      typedStats = ranges.collect {
+        case (r, c, "str", i) =>
+          val ((lo, _), (hi, hiT)) = (truncBytes(r.getString(i)), truncBytes(r.getString(i + 1)))
+          TypedFileStat(r.getString(0), c, "str", encB64(lo), encB64(hi), hiT)
+        case (r, c, kind, i) if kind != "long" =>
+          TypedFileStat(r.getString(0), c, kind, r.getLong(i).toString,
+            r.getLong(i + 1).toString, hiTrunc = false)
+      },
+      partVals = partVals,
+      // a zero-ROW own file produces no group row above but its row
+      // count is still a KNOWN fact — 0 (Delta's numRecords=0 shape) keeps
+      // the count index COMPLETE: the DSv2 metadata-only aggregates need
+      // a row count for every file, and a full delete's empty rewrite
+      // must not silently break them
+      rowCounts = ownFiles.map(_ -> 0L).toMap ++ rows.map(r => r.getString(0) -> r.getLong(1)),
+      nullStats = for (r <- rows; (c, i) <- effCols.zipWithIndex)
+        yield FileNullStat(r.getString(0), c, r.getLong(1) - r.getLong(4 + 3 * i)))
   }
 
   /** Best-effort retention, file-granular: keep the newest `keep`
@@ -1454,38 +1461,39 @@ object SnapshotStore {
     try {
       val all = manifestFiles(fs, tgt)
       if (all.size > keep) {
-        val committed = all.iterator
-          .map { case (id, p) => (id, resolve(fs, tgt, p)) }
-          .collect { case (id, Some(m)) => (id, m) }
-          .take(keep).toSeq
-        if (committed.size == keep) {
-          val cutoff = committed.last._1
-          // referenced = every root-relative file a retained committed
-          // manifest reads, plus the whole just-promoted dir (its
-          // manifest is by construction at/above the cutoff)
-          val referenced = committed.flatMap { case (_, m) => manifestDataFiles(fs, tgt, m) }.toSet
-          val primaries  = committed.map(_._2.snap).toSet + justPromoted
-          all.filter(_._1 < cutoff).foreach { case (_, p) => fs.delete(p, false) }
-          fs.listStatus(tgt).foreach { st =>
-            val n = st.getPath.getName
-            if (n.startsWith(SnapshotPrefix) && !primaries.contains(n)) {
-              // a dir above the cutoff whose manifest was unreadable
-              // this pass must survive whole (it may be mid-commit);
-              // everything else keeps exactly its referenced files
-              val claimedAbove = all.filter(_._1 >= cutoff).exists { case (_, p) =>
-                readContent(fs, p).exists(parseManifest(_).snap == n)
-              }
-              if (!claimedAbove) {
-                val files = dirDataFiles(fs, tgt, n)
-                val (kept, dead) = files.partition(referenced.contains)
-                if (kept.isEmpty) fs.delete(st.getPath, true)
-                else dead.foreach(f => fs.delete(new Path(tgt, f), false))
-              }
-            }
-          }
-        }
+        val retained = committed(fs, tgt, all).take(keep).toSeq
+        if (retained.size == keep)
+          sweep(fs, tgt, all, retained, Some(retained.last._1), Some(justPromoted))
       }
     } catch { case _: java.io.IOException => () }
+
+  /** The one retention sweep of [[gc]] and [[vacuum]]. Deletes the
+    * `listed` manifests below `cutoff`, then every snapshot file that no
+    * `retained` manifest references — a directory left with none goes
+    * whole. A directory survives whole when a retained manifest names it
+    * as primary, when it is `alsoKeep`, or when any other listed
+    * manifest at or above the cutoff (every one, without a cutoff) names
+    * it: that manifest did not resolve — torn, or mid-commit — and may
+    * yet. Each such manifest's content is read once; the retained ones
+    * are already in hand. */
+  private def sweep(fs: FileSystem, tgt: Path, listed: Seq[(Long, Path)],
+      retained: Seq[(Long, ManifestData)], cutoff: Option[Long],
+      alsoKeep: Option[String] = None): Unit = {
+    cutoff.foreach(c => listed.filter(_._1 < c).foreach { case (_, p) => fs.delete(p, false): Unit })
+    val referenced = retained.flatMap { case (_, m) => manifestDataFiles(fs, tgt, m) }.toSet
+    val retainedIds = retained.map(_._1).toSet
+    val claimed = listed.filter { case (id, _) => cutoff.forall(id >= _) && !retainedIds(id) }
+      .flatMap { case (_, p) => readContent(fs, p).map(parseManifest(_).snap) }
+    val whole = retained.map(_._2.snap).toSet ++ claimed ++ alsoKeep
+    fs.listStatus(tgt).foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith(SnapshotPrefix) && !whole.contains(n)) {
+        val (kept, dead) = dirDataFiles(fs, tgt, n).partition(referenced.contains)
+        if (kept.isEmpty) fs.delete(st.getPath, true): Unit
+        else dead.foreach(f => fs.delete(new Path(tgt, f), false): Unit)
+      }
+    }
+  }
 
   /** Standalone storage hygiene — the VACUUM of the heavyweight
     * formats: apply the commit-path retention WITHOUT committing
@@ -1539,38 +1547,21 @@ object SnapshotStore {
       val (fs, tgt) = fsOf(spark, dir)
       if (!fs.exists(tgt)) return
       val all = manifestFiles(fs, tgt)
-      val committed = all.iterator
-        .map { case (id, p) => (id, resolve(fs, tgt, p)) }
-        .collect { case (id, Some(m)) => (id, m) }.toSeq
+      val resolved = committed(fs, tgt, all).toSeq
       val horizon = nowMicros.map(_ - retentionMicros)
       def young(m: ManifestData): Boolean = horizon.exists(h => m.asOf.exists(_ >= h))
-      val byKeep = committed.take(keep)
+      val byKeep = resolved.take(keep)
       // retained = the keep-newest committed set, widened to every
       // version still inside the retention window; the cutoff is the
       // oldest protected id, and everything at/above it survives
-      // (conservative — committed is newest-first, so the protected set
-      // is effectively a prefix)
-      val protectedIds = byKeep.map(_._1) ++ committed.filter(c => young(c._2)).map(_._1)
+      // (conservative — resolved is newest-first, so the protected set
+      // is effectively a prefix). Manifests go only once a full keep set
+      // exists — the commit-path rule.
+      val protectedIds = byKeep.map(_._1) ++ resolved.filter(c => young(c._2)).map(_._1)
       val retained =
-        if (protectedIds.isEmpty) committed.take(0)
-        else { val cutoff = protectedIds.min; committed.filter(_._1 >= cutoff) }
-      if (byKeep.size == keep && retained.nonEmpty) {
-        val cutoff = retained.last._1
-        all.filter(_._1 < cutoff).foreach { case (_, p) => fs.delete(p, false): Unit }
-      }
-      val referenced = retained.flatMap { case (_, m) => manifestDataFiles(fs, tgt, m) }.toSet
-      val claimed = manifestFiles(fs, tgt)
-        .flatMap { case (_, p) => readContent(fs, p).map(parseManifest(_).snap) }.toSet
-      val protectWhole = retained.map(_._2.snap).toSet ++ claimed
-      fs.listStatus(tgt).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(SnapshotPrefix) && !protectWhole.contains(n)) {
-          val files = dirDataFiles(fs, tgt, n)
-          val (kept, dead) = files.partition(referenced.contains)
-          if (kept.isEmpty) fs.delete(st.getPath, true): Unit
-          else dead.foreach(f => fs.delete(new Path(tgt, f), false): Unit)
-        }
-      }
+        if (protectedIds.isEmpty) Nil
+        else { val cutoff = protectedIds.min; resolved.filter(_._1 >= cutoff) }
+      sweep(fs, tgt, all, retained, retained.lastOption.map(_._1).filter(_ => byKeep.size == keep))
     } catch { case _: java.io.IOException => () }
   }
 

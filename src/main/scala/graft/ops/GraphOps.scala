@@ -726,12 +726,6 @@ object GraphOps {
     * follows it), which is why this needs no byte-determinism care
     * and no oracle read_parquet. Existence is gated on the _SUCCESS
     * marker, so a torn earlier write rebuilds. */
-  // single-slot fingerprint memo keyed by graft.Artifacts.inputsKey:
-  // all nine graph ops derive `li` identically per corpus, so a sweep
-  // pays the fingerprint scan once, not nine times (the SimOps.corpusFp
-  // discipline), and an in-place rewrite of lineitem re-fingerprints
-  private var fpMemo: Option[((Int, BigInt, Int, Long), Long)] = None
-
   private[ops] def coGraph(
       spark: org.apache.spark.sql.SparkSession, li: DataFrame): (DataFrame, DataFrame) =
     GraphOps.synchronized {
@@ -742,15 +736,11 @@ object GraphOps {
       // hashes overflows, which ANSI mode — Spark 4's default — turns
       // into a job failure) and folds to a long driver-side. No oracle
       // mirrors this value — the oracles derive the edges from
-      // lineitem independently.
-      val memoKey = graft.Artifacts.inputsKey(li)
-      val fp = fpMemo match {
-        case Some((k, v)) if k == memoKey => v
-        case _ =>
-          val v = graft.Artifacts.decFp(li,
-            pmod(xxhash64(col(li.columns.head), col(li.columns(1))), lit(1000000007L)))
-          fpMemo = Some((memoKey, v))
-          v
+      // lineitem independently. Memoized per lineitem input: all nine
+      // graph ops derive `li` identically, so a sweep pays the scan once.
+      val fp = graft.Artifacts.fingerprintOnce("coGraph", li) {
+        graft.Artifacts.decFp(li,
+          pmod(xxhash64(col(li.columns.head), col(li.columns(1))), lit(1000000007L)))
       }
       val ep = s"$GraphArtifactDir/co_edges.parquet/corpus_fp=$fp"
       val np = s"$GraphArtifactDir/co_nodes.parquet/corpus_fp=$fp"

@@ -140,28 +140,15 @@ object SimOps {
 
   /** Content fingerprint of the embeddings corpus — Σ ⌊dim₁·2²⁰⌋
     * (the COUNT collides across sf0.001/sf0.01, both 500 vectors); the
-    * same sum the artifact-reading oracles compute in SQL. */
-  /** Single-slot corpus-fingerprint memo (the GraphOps.fpMemo
-    * discipline, r18): every artifact-backed consumer — the recall
-    * evals, knn graph, semantic dedup, and (since r18) the ivf_kmeans/
-    * pq/pq8 retrieval paths — pays the fingerprint scan once per
-    * session instead of once per artifact access. Keyed by
-    * [[graft.Artifacts.inputsKey]], so a corpus rewritten IN PLACE to
-    * the same plan and byte size re-fingerprints instead of resolving
-    * a stale persisted quantizer/codebook. */
-  private var corpusFpMemo: Option[((Int, BigInt, Int, Long), Long)] = None
-  private[ops] def corpusFp(emb: DataFrame): Long = synchronized {
-    val key = graft.Artifacts.inputsKey(emb)
-    corpusFpMemo match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val v = emb
-          .agg(sum(floor(element_at(col("embedding"), 1).cast("double") * 1048576).cast("long")))
-          .head().getLong(0)
-        corpusFpMemo = Some((key, v))
-        v
+    * same sum the artifact-reading oracles compute in SQL. Memoized by
+    * [[graft.Artifacts.fingerprintOnce]]: the recall evals, knn graph,
+    * semantic dedup and the ivf_kmeans/pq/pq8 retrieval paths pay the
+    * scan once per corpus. */
+  private[ops] def corpusFp(emb: DataFrame): Long =
+    graft.Artifacts.fingerprintOnce("corpus", emb) {
+      emb.agg(sum(floor(element_at(col("embedding"), 1).cast("double") * 1048576).cast("long")))
+        .head().getLong(0)
     }
-  }
 
   /** The persisted trained coarse quantizer — ONE artifact per corpus
     * (fingerprint hive partition, `_SUCCESS`-gated), used by every op

@@ -123,4 +123,32 @@ class ResolutionCostSpec extends SparkSuite {
       "a stale memo hit whose snapshot is gone must be re-read, not read as 'never committed'")
     assert(SnapshotStore.read(spark, t).get.as[(Long, String)].collect().toSeq == Seq(2L -> "b"))
   }
+
+  test("a GC-triggering promote reads each listed manifest at most once, however many orphan dirs it sweeps") {
+    val t = freshTable()
+    (0 until 3).foreach { i =>
+      SnapshotStore.promote(spark, t, Seq((i.toLong, s"v$i")).toDF("k", "v"), keep = 2): Unit
+    }
+    // three orphan snapshot dirs, as crashed writers leave them: written
+    // and complete, never claimed by a manifest
+    val root = new java.io.File(t)
+    val orphans = (0 until 3).map { i =>
+      val o = new java.io.File(root, f"snapshot-${90L + i}%020d-0000000$i")
+      Seq((99L, "orphan")).toDF("k", "v").write.parquet(o.getPath)
+      o
+    }
+    def manifests = root.listFiles().map(_.getName).filter(_.startsWith("manifest-")).sorted.toSeq
+    // the promote below claims one more manifest, then GC lists them all
+    val listed = manifests.size + 1
+    SnapshotStore.clearManifestMemo()
+    val before = SnapshotStore.contentReads.get()
+    assert(SnapshotStore.promote(spark, t, Seq((3L, "v3")).toDF("k", "v"), keep = 2) == 3L)
+    val reads = SnapshotStore.contentReads.get() - before
+    assert(reads <= listed,
+      s"the commit and its GC must read each of the $listed listed manifests at most once, read $reads")
+    assert(orphans.forall(!_.exists()), "GC collects every unclaimed snapshot dir")
+    assert(manifests == Seq(f"manifest-${2L}%020d", f"manifest-${3L}%020d"))
+    assert(SnapshotStore.readVersion(spark, t, 2L).get.as[(Long, String)].collect().toSeq == Seq(2L -> "v2"))
+    assert(SnapshotStore.read(spark, t).get.as[(Long, String)].collect().toSeq == Seq(3L -> "v3"))
+  }
 }
