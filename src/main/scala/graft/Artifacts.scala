@@ -44,34 +44,19 @@ object Artifacts {
     * read re-infers the schema on EVERY call, and Spark 4 runs that
     * footer read as a driver-blocking JOB — per table or artifact per
     * query build, the dominant term of the small-query driver floor (a
-    * 264-query bench sweep re-paid it thousands of times). The memo is
-    * pure metadata (the schema the same inference returns), keyed by
-    * (path, mtime and length of `keyPath`) — the file whose status moves
-    * whenever `path`'s content can: the table file itself for
-    * [[Tables]], the `_SUCCESS` marker for [[read]]. The planned scan is
-    * byte-identical either way; falls back to plain inference when
-    * `keyPath` is unreadable. Cleared wholesale past 256 entries. */
+    * 264-query bench sweep re-paid it thousands of times). The memo
+    * ([[FileMemo]]) is pure metadata (the schema the same inference
+    * returns), keyed by `path` and the identity of `keyPath` — the file
+    * whose status moves whenever `path`'s content can: the table file
+    * itself for [[Tables]], the `_SUCCESS` marker for [[read]]. The
+    * planned scan is byte-identical either way; falls back to plain
+    * inference when `keyPath` is unreadable. */
   private[graft] def readParquetMemo(spark: org.apache.spark.sql.SparkSession, path: String,
-      keyPath: org.apache.hadoop.fs.Path): org.apache.spark.sql.DataFrame = {
-    val key = scala.util.Try {
-      val st = keyPath.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(keyPath)
-      (path, st.getModificationTime, st.getLen)
-    }.toOption
-    key.flatMap(k => Option(schemaMemo.get(k))) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach { k =>
-          if (schemaMemo.size > 256) schemaMemo.clear()
-          schemaMemo.put(k, df.schema): Unit
-        }
-        df
-    }
-  }
-
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      org.apache.spark.sql.types.StructType]()
+      keyPath: org.apache.hadoop.fs.Path): org.apache.spark.sql.DataFrame =
+    FileMemo.fileId(keyPath.getFileSystem(spark.sparkContext.hadoopConfiguration), keyPath)
+      .flatMap(id =>
+        FileMemo.get(FileMemo.Schema, Seq(id), path)(Some(spark.read.parquet(path).schema)))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** The shared content-fingerprint fold: Σ term over `df` carried in
     * DECIMAL(38,0) (a raw BIGINT sum of hash-sized terms overflows,
@@ -86,43 +71,5 @@ object Artifacts {
     val d = df.agg(sum(term.cast("decimal(38,0)"))).head().getDecimal(0)
     if (d == null) 0L
     else d.remainder(new java.math.BigDecimal(1000000000000000L)).longValueExact()
-  }
-
-  /** The content fingerprint `fold` computes over `df`, memoized by
-    * (kind, [[inputsKey]]`(df)`): every artifact-backed consumer of one
-    * corpus (the recall evals, knn graph, semantic dedup, the graph ops'
-    * co-purchase artifact) pays the fingerprint scan once per session,
-    * not once per artifact access, and an input rewritten in place
-    * re-fingerprints instead of resolving a stale persisted artifact.
-    * `kind` names the fold, so two folds over one input never share a
-    * value. Cleared wholesale past 256 entries. */
-  private[graft] def fingerprintOnce(kind: String, df: org.apache.spark.sql.DataFrame)(
-      fold: => Long): Long = {
-    if (fingerprints.size > 256) fingerprints.clear()
-    fingerprints.computeIfAbsent((kind, inputsKey(df)), _ => fold)
-  }
-
-  private val fingerprints =
-    new java.util.concurrent.ConcurrentHashMap[(String, (Int, BigInt, Int, Long)), java.lang.Long]()
-
-  /** The key a content-fingerprint memo is stored under: `df`'s analyzed
-    * plan hash, its planned size in bytes, every input file's (path,
-    * length) and the newest input mtime. The plan hash alone is PATH
-    * identity and the size misses an equal-size rewrite; the mtime
-    * moves on any in-place rewrite of a file under the same name, so
-    * the memo re-fingerprints (CorpusFpMemoSpec pins this through both
-    * consumers, SimOps.corpusFp and GraphOps.coGraph). Driver-side metadata
-    * only: one getFileStatus per input file, never a data scan. */
-  def inputsKey(df: org.apache.spark.sql.DataFrame): (Int, BigInt, Int, Long) = {
-    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
-    var maxM = 0L
-    val idHash = df.inputFiles.toSeq.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = scala.util.Try(p.getFileSystem(hconf).getFileStatus(p)).toOption
-      st.foreach(s => maxM = math.max(maxM, s.getModificationTime))
-      (f, st.map(_.getLen).getOrElse(-1L))
-    }.hashCode
-    (df.queryExecution.analyzed.semanticHash(),
-      df.queryExecution.optimizedPlan.stats.sizeInBytes, idHash, maxM)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -14,7 +13,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * cache and persistent RDDs cleared before EVERY repeat, so no repeat
   * is measured on a frame an earlier repeat persisted. One row per
   * repeat (GRAFT_PROFILE_RUNS, default 2): the first carries one-time
-  * artifact builds and codegen, later ones run warm.
+  * artifact builds and codegen, later ones run warm. The last column is
+  * the repeat's [[FileMemo]] traffic: hits/misses/evictions per kind
+  * that saw any.
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.Profile <sfDir> key..."
   */
@@ -106,13 +107,14 @@ object Profile {
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 
     val repeats = sys.env.getOrElse("GRAFT_PROFILE_RUNS", "2").toInt
-    println(f"${"query"}%-34s ${"sec"}%7s ${"jobs"}%5s ${"stg"}%4s ${"task"}%5s ${"taskSec"}%8s ${"gcMs"}%6s ${"shRdMB"}%7s ${"shWrMB"}%7s ${"shRdRec"}%9s ${"inMB"}%7s ${"spillMB"}%7s ${"maxTask"}%7s")
+    println(f"${"query"}%-34s ${"sec"}%7s ${"jobs"}%5s ${"stg"}%4s ${"task"}%5s ${"taskSec"}%8s ${"gcMs"}%6s ${"shRdMB"}%7s ${"shWrMB"}%7s ${"shRdRec"}%9s ${"inMB"}%7s ${"spillMB"}%7s ${"maxTask"}%7s memo(h/m/e)")
     keys.foreach { name =>
       (1 to repeats).foreach { i =>
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
         System.gc()
         acc.reset()
+        val memo0 = FileMemo.kinds.map(FileMemo.stats)
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(name)(spark, sfDir)
         val tBuild = (System.nanoTime() - t0) / 1e9
@@ -123,7 +125,10 @@ object Profile {
         System.err.println(f"[profile] $label%-34s build=$tBuild%.3f ($buildJobs jobs) action=${sec - tBuild}%.3f")
         // let straggler listener events drain before reading the counters
         acc.quiesce()
-        println(f"$label%-34s $sec%7.3f ${acc.jobs.get}%5d ${acc.stages.get}%4d ${acc.tasks.get}%5d ${acc.taskTimeMs.get / 1000.0}%8.2f ${acc.gcMs.get}%6d ${acc.shufReadB.get / 1e6}%7.1f ${acc.shufWriteB.get / 1e6}%7.1f ${acc.shufReadRec.get}%9d ${acc.inputB.get / 1e6}%7.1f ${acc.spillB.get / 1e6}%7.1f ${acc.maxTaskMs.get}%7d")
+        val memo = FileMemo.kinds.zip(memo0).map { case (k, s0) => k.name -> (FileMemo.stats(k) - s0) }
+          .collect { case (n, d) if d.hits + d.misses + d.evictions > 0 =>
+            s"$n ${d.hits}/${d.misses}/${d.evictions}" }.mkString(" ")
+        println(f"$label%-34s $sec%7.3f ${acc.jobs.get}%5d ${acc.stages.get}%4d ${acc.tasks.get}%5d ${acc.taskTimeMs.get / 1000.0}%8.2f ${acc.gcMs.get}%6d ${acc.shufReadB.get / 1e6}%7.1f ${acc.shufWriteB.get / 1e6}%7.1f ${acc.shufReadRec.get}%9d ${acc.inputB.get / 1e6}%7.1f ${acc.spillB.get / 1e6}%7.1f ${acc.maxTaskMs.get}%7d $memo")
         if (sys.env.contains("GRAFT_PROFILE_JOBS"))
           acc.jobLog.forEach(l => System.err.println(s"[jobs] $label $l"))
       }

@@ -515,54 +515,30 @@ object SnapshotStore {
     }
   }
 
-  /** Parsed-manifest memo (r18). Committed manifests are WRITE-ONCE by
-    * the claim protocol (create-no-overwrite + content + terminator;
-    * no rewrite path exists), so a parse keyed by (path, length,
-    * mtime) can be reused for the session — a metadata-heavy op (the
-    * CDC/purge read path resolves the same manifest ~10× per
-    * invocation) pays one read+parse per manifest instead. Resolution
-    * SEMANTICS are unchanged: only terminated manifests are memoized
-    * (a torn write that completes later must re-read), and the primary
-    * dir's `_SUCCESS` liveness check still runs on every call, so a
-    * GC'd version resolves None exactly as before. A hit that FAILS the
-    * liveness check is dropped and re-read from disk once: a table
-    * dropped and recreated at the same path can write a new manifest
-    * with the old one's key (same length, mtime within the clock's
-    * granularity), and trusting the stale parse would name the old,
-    * deleted snapshot — the table would read as never committed.
-    * Bounded: cleared wholesale past 512 entries (a session touches far
-    * fewer). */
-  private val manifestMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), ManifestData]()
-  private[etl] def clearManifestMemo(): Unit = manifestMemo.clear()
-
   /** Resolve ONE manifest to its committed content: it parses WITH the
     * content terminator and the PRIMARY snapshot directory carries
     * `_SUCCESS` — a manifest whose write raced a crash (no content, or
-    * a truncated prefix of it) resolves to None. */
+    * a truncated prefix of it) resolves to None.
+    *
+    * The parse is memoized in [[graft.FileMemo]] by the manifest's
+    * identity: committed manifests are WRITE-ONCE by the claim protocol
+    * (create-no-overwrite + content + terminator; no rewrite path
+    * exists), so a metadata-heavy op (the CDC/purge read path resolves
+    * the same manifest ~10× per invocation) pays one read+parse per
+    * manifest. Only terminated manifests are memoized (a torn write
+    * that completes later must re-read), and the liveness check runs on
+    * every call, so a GC'd version resolves None exactly as before. A
+    * hit that FAILS the liveness check is dropped and re-read once: a
+    * table dropped and recreated at the same path can write a new
+    * manifest with the old one's key (same length, mtime within the
+    * clock's granularity), and trusting the stale parse would name the
+    * old, deleted snapshot. */
   private def resolve(fs: FileSystem, tgt: Path, manifest: Path): Option[ManifestData] = {
-    val key = scala.util.Try {
-      val st = fs.getFileStatus(manifest)
-      (manifest.toString, st.getLen, st.getModificationTime)
-    }.toOption
     def live(m: ManifestData) = fs.exists(new Path(new Path(tgt, m.snap), "_SUCCESS"))
-    def load(): Option[ManifestData] = {
-      val p = readContent(fs, manifest)
-        .map(parseManifest)
-        .filter(m => m.terminated && m.snap.nonEmpty)
-      for (k <- key; m <- p) {
-        if (manifestMemo.size > 512) manifestMemo.clear()
-        manifestMemo.put(k, m): Unit
-      }
-      p
-    }
-    key.flatMap(k => Option(manifestMemo.get(k))) match {
-      case Some(m) if live(m) => Some(m)
-      case Some(_) =>
-        key.foreach(manifestMemo.remove)
-        load().filter(live)
-      case None => load().filter(live)
-    }
+    def load() = readContent(fs, manifest).map(parseManifest)
+      .filter(m => m.terminated && m.snap.nonEmpty)
+    graft.FileMemo.fileId(fs, manifest).flatMap(id =>
+      graft.FileMemo.get[ManifestData](graft.FileMemo.Manifest, Seq(id), valid = live)(load()))
   }
 
   /** The data files a committed manifest references, table-root

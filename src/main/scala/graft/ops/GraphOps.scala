@@ -738,7 +738,7 @@ object GraphOps {
       // mirrors this value — the oracles derive the edges from
       // lineitem independently. Memoized per lineitem input: all nine
       // graph ops derive `li` identically, so a sweep pays the scan once.
-      val fp = graft.Artifacts.fingerprintOnce("coGraph", li) {
+      val fp = graft.FileMemo.ofInputs(graft.FileMemo.Fingerprint, li, "coGraph") {
         graft.Artifacts.decFp(li,
           pmod(xxhash64(col(li.columns.head), col(li.columns(1))), lit(1000000007L)))
       }

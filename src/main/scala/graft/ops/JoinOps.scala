@@ -253,7 +253,12 @@ object JoinOps {
       val t = Tables(spark, dir)
       val dim = t.customer.filter(col("c_nationkey") < 5)
         .select(col("c_custkey"), col("c_nationkey").cast("long"))
-      val bloom = bloomBitset(dim, dir)
+      // memoized by the customer file's identity: the build is a job, and
+      // Explain, plan specs and bench warm-up construct this frame again
+      val bloom = graft.FileMemo.ofInputs(graft.FileMemo.Bloom, dim, "bloom") {
+        dim.agg(expr("bloom_build(CAST(c_custkey AS STRING), 1048576, 5)").as("bf"))
+          .head().getAs[Array[Byte]](0)
+      }
       t.orders
         .filter(call_function("bloom_contains",
           lit(bloom), col("o_custkey").cast("string"), lit(5)))
@@ -354,17 +359,4 @@ object JoinOps {
   def intervalBins(lineitem: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     intervals(lineitem).withColumn("bin", explode(sequence(
       date_trunc("month", col("s")), date_trunc("month", col("e")), expr("interval 1 month"))))
-
-  /** Memoized dim-key bitset, one per testdata dir (the cachedEmb
-    * convention): the bloom build is an eager collect — a real job — and
-    * without memoization every construction of the DataFrame (Explain,
-    * plan specs, bench warmup) would re-run it. One fixed 128 KiB entry
-    * per dir ever seen — two in practice (sf0.001 / sf0.01). */
-  private val bloomCache = scala.collection.mutable.Map.empty[String, Array[Byte]]
-  private def bloomBitset(dim: org.apache.spark.sql.DataFrame, dir: String): Array[Byte] =
-    synchronized {
-      bloomCache.getOrElseUpdate(dir, dim
-        .agg(expr("bloom_build(CAST(c_custkey AS STRING), 1048576, 5)").as("bf"))
-        .head().getAs[Array[Byte]](0))
-    }
 }

@@ -141,11 +141,11 @@ object SimOps {
   /** Content fingerprint of the embeddings corpus — Σ ⌊dim₁·2²⁰⌋
     * (the COUNT collides across sf0.001/sf0.01, both 500 vectors); the
     * same sum the artifact-reading oracles compute in SQL. Memoized by
-    * [[graft.Artifacts.fingerprintOnce]]: the recall evals, knn graph,
-    * semantic dedup and the ivf_kmeans/pq/pq8 retrieval paths pay the
-    * scan once per corpus. */
+    * [[graft.FileMemo.ofInputs]]: the recall evals, knn graph, semantic
+    * dedup and the ivf_kmeans/pq/pq8 retrieval paths pay the scan once
+    * per corpus; a corpus rewritten in place re-fingerprints. */
   private[ops] def corpusFp(emb: DataFrame): Long =
-    graft.Artifacts.fingerprintOnce("corpus", emb) {
+    graft.FileMemo.ofInputs(graft.FileMemo.Fingerprint, emb, "corpus") {
       emb.agg(sum(floor(element_at(col("embedding"), 1).cast("double") * 1048576).cast("long")))
         .head().getLong(0)
     }

@@ -4,17 +4,17 @@ import java.util.concurrent.{Future => JFuture, TimeUnit}
 
 import scala.concurrent.Promise
 
+import graft.FileMemo
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, InterpretedUnsafeProjection, PlanExpression, Predicate, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, InterpretedUnsafeProjection, PlanExpression, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastMode, BroadcastPartitioning, Partitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SQLExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.StructType
 
 /** Job-free broadcasts of small store snapshot scans, an AQE query-stage
   * preparation rule. It replaces a `BroadcastExchangeExec` with a
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.StructType
   * Why: a star report joins its fact to small dimensions that are
   * committed store versions. Spark collects each broadcast side with a
   * one-task job per query, followed by an AQE re-plan. Snapshot files are
-  * write-once, so the scan's rows can be read once and kept
-  * ([[SnapshotRows]]); each query then applies its own filters and
+  * write-once, so the scan's rows can be read once and kept (the rows
+  * kind of [[graft.FileMemo]]); each query then applies its own filters and
   * projections to them on the driver and broadcasts the result without
   * a job. The rows are memoized, not the broadcast: a request's filters
   * differ (constraint propagation copies its date window into the
@@ -61,13 +61,13 @@ object SnapshotBroadcast extends Rule[SparkPlan] {
 
   /** The scan's files, when it is an unpartitioned, unbucketed batch
     * scan of snapshot files within the broadcast threshold. */
-  private def snapshotFiles(s: FileSourceScanExec): Option[Seq[SnapshotRows.FileId]] = {
+  private def snapshotFiles(s: FileSourceScanExec): Option[Seq[FileMemo.FileId]] = {
     val r = s.relation
     if (r.partitionSchema.nonEmpty || r.bucketSpec.nonEmpty || s.stream.nonEmpty ||
       r.sizeInBytes > conf.autoBroadcastJoinThreshold) None
     else {
       val files = r.location.listFiles(Nil, Nil).flatMap(_.files).map(f =>
-        SnapshotRows.FileId(f.getPath.toString, f.getLen, f.getModificationTime))
+        FileMemo.FileId(f.getPath.toString, f.getLen, f.getModificationTime))
       val hadoopConf = r.sparkSession.sessionState.newHadoopConfWithOptions(r.options)
       Some(files.sortBy(_.path))
         .filter(fs => graft.etl.SnapshotStore.areSnapshotFiles(hadoopConf, fs.map(f => new Path(f.path))))
@@ -76,7 +76,8 @@ object SnapshotBroadcast extends Rule[SparkPlan] {
 }
 
 /** A broadcast built on the driver, with no Spark job, from the rows of
-  * `files`: the memoized rows of its scan ([[SnapshotRows]]; a miss
+  * `files`: the memoized rows of its scan (the rows kind of
+  * [[graft.FileMemo]], capped by the broadcast threshold; a miss
   * collects them with one job) go through the child's filters and
   * projections on the driver, then into `mode`'s relation. The child is
   * kept for the plan's output, canonical form and EXPLAIN; it runs only
@@ -84,7 +85,7 @@ object SnapshotBroadcast extends Rule[SparkPlan] {
   * [[SnapshotBroadcast]] accepted. Its name keeps "Exchange" only inside
   * "BroadcastExchange", as plan checks that look for shuffles expect. */
 case class SnapshotBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan,
-    files: Seq[SnapshotRows.FileId]) extends BroadcastExchangeLike {
+    files: Seq[FileMemo.FileId]) extends BroadcastExchangeLike {
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "dataSize" -> SQLMetrics.createSizeMetric(sparkContext, "data size"),
@@ -113,7 +114,7 @@ case class SnapshotBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan,
         sparkContext.setInterruptOnCancel(true)
         val rows = onDriver(child)
         metrics("numOutputRows") += rows.length
-        metrics("dataSize") += SnapshotRows.sizeOf(rows)
+        metrics("dataSize") += FileMemo.Rows.weigh(files, rows)
         val b = sparkContext.broadcast[Any](mode.transform(rows.iterator, Some(rows.length.toLong)))
         SQLMetrics.postDriverMetricUpdates(sparkContext,
           sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
@@ -145,11 +146,11 @@ case class SnapshotBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan,
     case InputAdapter(c) => onDriver(c)
     case ColumnarToRowExec(c) => onDriver(c)
     case s: FileSourceScanExec =>
-      SnapshotRows.get(SnapshotRows.Key(files, s.schema, s.relation.options),
+      FileMemo.get(FileMemo.Rows, files, (s.schema, s.relation.options),
         conf.autoBroadcastJoinThreshold) {
         val all = s.copy(dataFilters = Nil)
-        (if (all.supportsColumnar) ColumnarToRowExec(all) else all).executeCollect()
-      }
+        Some((if (all.supportsColumnar) ColumnarToRowExec(all) else all).executeCollect())
+      }.get
     case other => other.executeCollect()
   }
 
@@ -172,58 +173,4 @@ object SnapshotBroadcastExchangeExec {
     t.setDaemon(true)
     t
   }
-}
-
-/** The rows of snapshot-file scans, by the files' identity and the
-  * scan's output schema and options: one least-recently-used memo whose
-  * rows total at most the broadcast threshold in bytes. It holds rows,
-  * not broadcasts, since a broadcast belongs to one SparkContext. */
-object SnapshotRows {
-  /** A file's identity: a snapshot file with the same path, length and
-    * modification time holds the same rows. */
-  final case class FileId(path: String, length: Long, mtime: Long)
-
-  final case class Key(files: Seq[FileId], schema: StructType, options: Map[String, String])
-
-  private final class Entry(val rows: Array[InternalRow], val bytes: Long)
-  private val lru = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
-  private var total = 0L
-
-  /** `key`'s rows; on a miss, `load`'s, kept if they fit `bound` bytes. */
-  def get(key: Key, bound: Long)(load: => Array[InternalRow]): Array[InternalRow] = {
-    val hit = synchronized {
-      trim(bound)
-      Option(lru.get(key)).map(_.rows)
-    }
-    hit.getOrElse {
-      val rows = load
-      val bytes = sizeOf(rows)
-      synchronized {
-        if (bytes <= bound && !lru.containsKey(key)) {
-          lru.put(key, new Entry(rows, bytes))
-          total += bytes
-          trim(bound)
-        }
-      }
-      rows
-    }
-  }
-
-  /** Evicts least-recently-used entries until the rows fit `bound`. */
-  private def trim(bound: Long): Unit = {
-    val it = lru.values().iterator()
-    while (total > bound && it.hasNext) {
-      total -= it.next().bytes
-      it.remove()
-    }
-  }
-
-  def sizeOf(rows: Array[InternalRow]): Long =
-    rows.iterator.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
-
-  /** Bytes of rows held. */
-  def bytes: Long = synchronized(total)
-
-  /** Number of scans held. */
-  def size: Int = synchronized(lru.size)
 }

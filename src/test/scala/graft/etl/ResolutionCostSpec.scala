@@ -36,7 +36,7 @@ class ResolutionCostSpec extends SparkSuite {
     // contract bounds (the memo's own contract is pinned in the last
     // test below)
     def reads(body: => Unit): Long = {
-      SnapshotStore.clearManifestMemo()
+      graft.FileMemo.clear(graft.FileMemo.Manifest)
       val before = SnapshotStore.contentReads.get()
       body
       SnapshotStore.contentReads.get() - before
@@ -71,7 +71,7 @@ class ResolutionCostSpec extends SparkSuite {
     val id = SnapshotStore.promote(spark, t, Seq((9L, "y")).toDF("k", "v"),
       keep = Int.MaxValue)
     assert(id == 4L, "the commit claims past the debris")
-    SnapshotStore.clearManifestMemo()
+    graft.FileMemo.clear(graft.FileMemo.Manifest)
     val before = SnapshotStore.contentReads.get()
     assert(SnapshotStore.read(spark, t).get.count() == 1L)
     assert(SnapshotStore.contentReads.get() - before == 1L,
@@ -84,7 +84,7 @@ class ResolutionCostSpec extends SparkSuite {
       SnapshotStore.promote(spark, t, Seq((i.toLong, s"v$i")).toDF("k", "v"),
         keep = Int.MaxValue, asOfMicros = Some(1000L + i)): Unit
     }
-    SnapshotStore.clearManifestMemo()
+    graft.FileMemo.clear(graft.FileMemo.Manifest)
     assert(SnapshotStore.read(spark, t).get.count() == 1L) // warms the memo
     val before = SnapshotStore.contentReads.get()
     assert(SnapshotStore.read(spark, t).get.count() == 1L)
@@ -140,7 +140,7 @@ class ResolutionCostSpec extends SparkSuite {
     def manifests = root.listFiles().map(_.getName).filter(_.startsWith("manifest-")).sorted.toSeq
     // the promote below claims one more manifest, then GC lists them all
     val listed = manifests.size + 1
-    SnapshotStore.clearManifestMemo()
+    graft.FileMemo.clear(graft.FileMemo.Manifest)
     val before = SnapshotStore.contentReads.get()
     assert(SnapshotStore.promote(spark, t, Seq((3L, "v3")).toDF("k", "v"), keep = 2) == 3L)
     val reads = SnapshotStore.contentReads.get() - before

@@ -65,7 +65,7 @@ class SnapshotBroadcastSpec extends SparkSuite {
         SnapshotStore.readKeyRange(spark, star.dir("fact_sales"), "date_key", 1L, 2L).get
           .select(col("member_key"), col("date_key").as("dk"))), "member_key"), Some(0L)))
     for ((name, threshold, query, expected) <- cases) {
-      val memo = (SnapshotRows.size, SnapshotRows.bytes)
+      val memo = rowsHeld
       val (ran, n) = withThreshold(threshold) {
         val df = query()
         val n = df.collect().length.toLong
@@ -77,7 +77,7 @@ class SnapshotBroadcastSpec extends SparkSuite {
         assert(ran.exists(_.isInstanceOf[BroadcastExchangeExec]),
           s"$name keeps no Spark broadcast:\n${ran.head}")
       expected.foreach(e => assert(n == e, name))
-      assert((SnapshotRows.size, SnapshotRows.bytes) == memo, s"$name changed the memo")
+      assert(rowsHeld == memo, s"$name changed the memo")
     }
   }
 
@@ -97,9 +97,9 @@ class SnapshotBroadcastSpec extends SparkSuite {
         df.collect()
         val builds = buildSides(df.queryExecution.executedPlan)
         assert(builds.nonEmpty && builds.forall(_.isInstanceOf[SnapshotBroadcastExchangeExec]), t)
-        assert(SnapshotRows.bytes <= threshold, s"memo holds ${SnapshotRows.bytes} bytes")
+        assert(rowsHeld._2 <= threshold, s"memo holds ${rowsHeld._2} bytes")
       }
-      assert(SnapshotRows.size < tables.size, "nothing was evicted")
+      assert(rowsHeld._1 < tables.size, "nothing was evicted")
     }
   }
 
@@ -138,6 +138,12 @@ class SnapshotBroadcastSpec extends SparkSuite {
 }
 
 object SnapshotBroadcastSpec {
+
+  /** (entries, bytes) the memo's rows kind holds. */
+  def rowsHeld: (Long, Long) = {
+    val s = graft.FileMemo.stats(graft.FileMemo.Rows)
+    (s.entries, s.bytes)
+  }
 
   def freshDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
